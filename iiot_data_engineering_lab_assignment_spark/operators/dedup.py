@@ -937,10 +937,12 @@ def keep_best(
     component, score quality, and keep the HIGHEST-QUALITY member per
     component (``id_col`` tiebreak).  The per-component argmax is an
     AGGREGATE — ``min(struct(-quality, id, quality))`` realizes the
-    (quality DESC, id ASC) pick exactly (quality_score is never
-    NULL/NaN: bounded arithmetic with an explicit <=0 branch), and
-    unlike a row_number window it partial-aggregates map-side with no
-    per-partition sort (guide §2.3; r16 rewrite, outputs identical).
+    (quality DESC NULLS LAST, id ASC) pick, and unlike a row_number
+    window it partial-aggregates map-side with no per-partition sort
+    (guide §2.3; r16 rewrite, outputs identical).  quality_score is
+    NULL for a NULL text, and min() sorts a NULL struct field first, so
+    the sort key reads a NULL quality as -inf: such a doc is kept only
+    when no member of its component has a score.
     Output: (doc_id, component, quality_score) of the kept documents."""
     from .text import quality_score
 
@@ -959,7 +961,7 @@ def keep_best(
         .agg(
             F.min(
                 F.struct(
-                    (-F.col("quality_score")).alias("negq"),
+                    (-F.coalesce("quality_score", F.lit(float("-inf")))).alias("negq"),
                     F.col(id_col).alias("kid"),
                     F.col("quality_score").alias("q"),
                 )

@@ -10,6 +10,8 @@ of files.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -1110,8 +1112,14 @@ def pq_codebook_train(
 def _dbl(x: float) -> str:
     """SQL double literal with exact round-trip value: repr() is the
     shortest digits that reparse to the same IEEE double, and the 'D'
-    suffix keeps the parser from typing plain decimals as DECIMAL."""
-    return f"{float(x)!r}D"
+    suffix keeps the parser from typing plain decimals as DECIMAL.
+    Non-finite values (a centroid averaged over NaN input) have no
+    literal form, so they become the string casts Spark parses."""
+    x = float(x)
+    if math.isfinite(x):
+        return f"{x!r}D"
+    name = "NaN" if math.isnan(x) else ("Infinity" if x > 0 else "-Infinity")
+    return f"CAST('{name}' AS DOUBLE)"
 
 
 def _pq_assign_sql(

@@ -880,3 +880,50 @@ def test_remove_duplicate_spans_full_duplicate_doc_empties(spark):
     out = {r["doc_id"]: r for r in remove_duplicate_spans(docs, k=8, min_span=50, gap=8).collect()}
     assert out[1]["clean_text"] == ""
     assert out[1]["n_removed"] == 52
+
+
+def test_keep_best_null_quality_sorts_last(spark):
+    """A NULL text scores a NULL quality; keep_best must rank it below
+    every scored member of its component (the row_number form's
+    ``desc(quality)`` NULLS LAST), and keep it only when it is alone."""
+    from iiot_data_engineering_lab_assignment_spark.operators.dedup import keep_best
+
+    base = " ".join(f"w{i}" for i in range(50))
+    docs = spark.createDataFrame(
+        [(1, None), (2, base), (3, None), (4, None), (5, "short doc")],
+        "doc_id long, text string",
+    )
+    # components {1, 2} and {3, 4}; 5 is a singleton
+    pairs = spark.createDataFrame([(1, 2), (3, 4)], "doc_a long, doc_b long")
+    kept = {r["doc_id"]: r["quality_score"] for r in keep_best(docs, pairs).collect()}
+    assert set(kept) == {2, 3, 5}
+    assert kept[2] == 1.0
+    assert kept[3] is None  # no scored member: the lowest id is kept
+
+
+def test_non_finite_centroids_and_codebook_assign(spark):
+    """A centroid table or PQ codebook holding NaN and +-inf (a centroid
+    averaged over NaN input) still builds and evaluates: its literals
+    render as casts Spark parses, not ``nanD``/``infD``, and a NaN
+    distance sorts after every number in the (d2, cell) argmin."""
+    from iiot_data_engineering_lab_assignment_spark.operators.similarity import (
+        _dbl,
+        assign_cells,
+        pq_encode,
+    )
+
+    nan, inf = float("nan"), float("inf")
+    lits = ", ".join(_dbl(x) for x in (nan, inf, -inf, 0.1))
+    row = spark.sql(f"SELECT {lits}").first()
+    assert math.isnan(row[0]) and list(row)[1:] == [inf, -inf, 0.1]
+    emb = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 2.0])], "vec_id long, embedding array<double>"
+    )
+    cents = {0: [nan, 1.0], 1: [inf, 0.0], 2: [-inf, 0.0], 3: [0.0, 0.0]}
+    cells = {r["vec_id"]: r["cell"] for r in assign_cells(emb, cents).collect()}
+    assert cells == {0: 3, 1: 3}
+    book = {0: [(0, [nan]), (1, [inf]), (2, [0.5])], 1: [(0, [-inf]), (1, [1.0])]}
+    codes = {
+        (r["vec_id"], r["sub_idx"]): r["code"] for r in pq_encode(emb, book).collect()
+    }
+    assert codes == {(0, 0): 2, (0, 1): 1, (1, 0): 2, (1, 1): 1}
