@@ -749,6 +749,11 @@ def main() -> None:
             "flags_armed": n_same_gen > 0,
             "codegen_compiles": cg_n1 - cg_n0,
             "codegen_compile_ms": round(cg_ms1 - cg_ms0, 1),
+            # Effective parallelism next to what was asked for, so a
+            # record whose timings ignore $SPARK_GRAFT_CPUS says so itself.
+            "master": spark.sparkContext.master,
+            "default_parallelism": spark.sparkContext.defaultParallelism,
+            "cpus_requested": int(os.environ.get("SPARK_GRAFT_CPUS") or 0) or None,
             "sf": sf,
         }
     )

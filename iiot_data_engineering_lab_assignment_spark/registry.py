@@ -22,7 +22,6 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.scalars import date_parts, iso8601, json_field
-from .operators.aggregates import grouped_stats
 from .operators.dedup import (
     connected_components,
     exact_dedup_groups,
@@ -31,15 +30,10 @@ from .operators.dedup import (
     minhash_lsh_pairs,
     simhash_pairs,
 )
-from .operators.joins import anti_join, join_dim, join_fact, semi_join
+from .operators.joins import join_dim
 from .operators.similarity import brute_force_topk, centroids, lsh_topk
 from .operators.text import fingerprint, language_id, quality_score, text_stats
-from .operators.windows import (
-    analytic_over,
-    session_rollup,
-    sliding_rollup,
-    tumbling_rollup,
-)
+from .operators.windows import session_rollup, sliding_rollup, tumbling_rollup
 from .sources.readers import load_table, register_views
 
 # Registration machinery lives in registry_core (r14: family modules
@@ -57,11 +51,15 @@ from .registry_core import (  # noqa: F401
     register,
 )
 
-# Deferred-registration family modules (r14 verdict ask #7): importing
-# them registers nothing; the register_run(...) calls below replay each
-# family's block at its original position, keeping QUERIES order intact.
-from . import (  # noqa: E402
+# Family modules register their queries on import.  Insertion order past
+# the first 50 rows carries no meaning: _apply_driver_window() below puts
+# DRIVER_WINDOW first and leaves the rest in registration order.
+from . import (  # noqa: F401
     registry_breadth,
+    registry_clustering,
+    registry_curation_text,
+    registry_graph,
+    registry_similarity,
     registry_sketches,
     registry_timeseries,
     registry_tpch,
@@ -450,14 +448,6 @@ def retention_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ===========================================================================
-# Extended relational surface (SURVEY.md section 2.6 contract):
-# joins / sorts / top-k / set ops / distinct / rollup / analytic windows
-# on the TPC-H-ish star schema.
-# ===========================================================================
-
-
-registry_tpch.register_run("rel")
 # ===========================================================================
 # Training-data pipeline extensions: dedup / similarity / text analysis
 # (SURVEY.md section 7.6)
@@ -1678,7 +1668,6 @@ def bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-registry_sketches.register_run("hll")
 @register(
     "stream_sliding_1m_30s",
     """
@@ -2096,13 +2085,6 @@ def salted_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ===========================================================================
-# Breadth wave: string / null / conditional / subquery / ranking surface —
-# the everyday-SQL capabilities a user of the reference's DB layer expects
-# ===========================================================================
-
-
-registry_breadth.register_run("strings")
 @register(
     "stream_session_5m",
     QUERIES["session_rollup_5m"].oracle,
@@ -2175,7 +2157,6 @@ def cosine_dup_pairs_blocked_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cosine_dup_pairs_blocked(emb, threshold=0.4).select("id_a", "id_b")
 
 
-registry_breadth.register_run("regexdate")
 @register(
     "ivf_topk",
     """
@@ -2467,7 +2448,6 @@ def stream_full_outer_join_purchase_click(spark: SparkSession, sf_dir: str) -> D
     return run_stream_stream_full_outer_join(spark, sf_dir, interval="6 hours")
 
 
-registry_breadth.register_run("stats")
 @register(
     "chunk_documents",
     """
@@ -2819,7 +2799,6 @@ def dedup_keep_best_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return keep_best(docs, pairs)
 
 
-registry_tpch.register_run("shipping")
 @register(
     "decontaminate_eval_overlap",
     """
@@ -3165,7 +3144,6 @@ def scd2_point_in_time_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-registry_timeseries.register_run("ewma")
 @register(
     "snapshot_diff_orders",
     """
@@ -3301,15 +3279,6 @@ def cohort_weekly_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- TimescaleDB-analog time-series operators -------------------------------
-# The reference's storage layer is TimescaleDB (infrastructure setup/
-# init-db.sql); its signature hypertable query surface — last(), 
-# time_bucket_gapfill + locf(), gap/downtime detection, time_weight() —
-# is reproduced here as pure DataFrame plans.
-
-
-registry_timeseries.register_run("sensors")
-registry_tpch.register_run("priority")
 @register(
     "grouping_sets_revenue",
     """
@@ -3367,16 +3336,6 @@ def range_frame_hourly_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- Round-2 TPC-H planner-stress shapes (VERDICT r1 item 7) ----------------
-# Q2 (correlated scalar-min subquery -> decorrelation), Q21 (multi semi/anti
-# lineitem self-join), Q10 (returned-item top-k), Q7 (two-nation volume).
-# The fixture has no partsupp/l_commitdate, so Q2 derives a partsupp analog
-# from lineitem (min extendedprice per part+supplier) and Q21 defines "late"
-# as shipping >60 days after the order date — the planner shapes (the point
-# of these queries) are unchanged.
-
-
-registry_tpch.register_run("suppliers")
 @register(
     "ngram_jaccard_pairs_capped",
     """
@@ -3497,7 +3456,6 @@ def fuzzy_match_documents_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("id_a", "id_b", F.col("distance").cast("int").alias("distance"))
 
 
-registry_tpch.register_run("forecast")
 @register(
     "token_budget_shards",
     """
@@ -3618,15 +3576,6 @@ def multimodal_frames_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "frame_idx",
         F.decode(F.col("frame"), "UTF-8").alias("frame_text"),
     )
-
-
-registry_tpch.register_run("share")
-
-# ---------------------------------------------------------------------------
-# K-means clustering family: split into registry_clustering.py (r13 verdict ask #9).  The import runs
-# the @register calls at THIS position, preserving QUERIES insertion order.
-# ---------------------------------------------------------------------------
-from . import registry_clustering  # noqa: E402,F401  (position-sensitive)
 
 
 @register(
@@ -3956,7 +3905,6 @@ def media_dedup_hash_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-registry_tpch.register_run("stock")
 @register(
     "semantic_dedup_pairs",
     """
@@ -4668,7 +4616,6 @@ def profile_documents_approx_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("column_name", "n_rows", "n_nulls", "distinct_within_3rsd")
 
 
-registry_timeseries.register_run("interp")
 @register(
     "weighted_sample_by_length",
     """
@@ -5287,7 +5234,6 @@ def dup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-registry_sketches.register_run("heavyhitters")
 @register(
     "tfidf_doc_similarity",
     """
@@ -5673,17 +5619,6 @@ def lexical_diversity_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-registry_timeseries.register_run("rates")
-
-
-# ---------------------------------------------------------------------------
-# Graph-analytics family: split into registry_graph.py (r13 verdict ask #9).  The import runs
-# the @register calls at THIS position, preserving QUERIES insertion order.
-# ---------------------------------------------------------------------------
-from . import registry_graph  # noqa: E402,F401  (position-sensitive)
-
-
-registry_timeseries.register_run("drift")
 @register(
     "last_touch_attribution",
     """
@@ -7647,7 +7582,6 @@ def source_epoch_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-registry_timeseries.register_run("rolling")
 @register(
     "quantile_normalize_by_source",
     """
@@ -7845,7 +7779,6 @@ def kcore_peeling_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-registry_timeseries.register_run("sax")
 @register(
     "bloom_semijoin_vip_events",
     """
@@ -8335,15 +8268,6 @@ def dup_aware_sample_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# PQ / IVF-PQ similarity family: split into registry_similarity.py (r13
-# verdict ask #9).  The import runs the @register calls at THIS position,
-# so QUERIES insertion order is identical to the pre-split module.
-# ---------------------------------------------------------------------------
-from . import registry_similarity  # noqa: E402,F401  (position-sensitive)
-
-
-registry_sketches.register_run("countmin")
 @register(
     "debounce_alerts",
     """
@@ -8431,9 +8355,8 @@ def debounce_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Round-11 wave: KMV sketch set algebra, chained streaming windows
+# Round-11 wave: CDC apply, run collapsing, chained streaming windows
 # ===========================================================================
-registry_sketches.register_run("kmv")
 @register(
     "cdc_apply_orders",
     """
@@ -8570,7 +8493,6 @@ def collapse_repeated_runs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-registry_sketches.register_run("histogram")
 @register(
     "stream_cascade_1m_to_5m",
     """
@@ -8600,17 +8522,6 @@ def stream_cascade_1m_to_5m_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_stream_cascade_rollup(spark, sf_dir)
 
 
-# ---------------------------------------------------------------------------
-# Corpus-curation / tokenizer-training family: split into registry_curation_text.py (r13 verdict ask #9).  The import runs
-# the @register calls at THIS position, preserving QUERIES insertion order.
-# ---------------------------------------------------------------------------
-from . import registry_curation_text  # noqa: E402,F401  (position-sensitive)
-
-
-# (pagerank_planted_quality registers in registry_graph.py, with its family)
-
-
-registry_timeseries.register_run("changepoint2")
 @register(
     "profile_salted_join_revenue",
     """

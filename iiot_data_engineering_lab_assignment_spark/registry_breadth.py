@@ -1,61 +1,22 @@
 """SQL-breadth surface: string/null/conditional/subquery/ranking/
-math/date functions and analytic-window shapes.
+math/date functions and analytic-window shapes — the everyday-SQL
+capabilities a user of the reference's DB layer expects.
 
-Split from registry.py (r14 verdict ask #7, continued in r15) with
-DEFERRED registration — the registry_tpch/registry_timeseries pattern:
-importing this module registers NOTHING; ``registry`` calls
-:func:`register_run` at the exact position each run's block previously
-occupied, keeping ``QUERIES`` insertion order byte-identical.  Family
-modules import ``registry_core``, never ``registry``.
+Queries register on import through ``registry_core.register``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .registry_core import QueryFn, davg, dsum, register  # noqa: F401
+from .registry_core import davg, register
 from .sources.readers import load_table
 from .functions.scalars import json_field
 from .sources.readers import register_views
 
-__all__ = ["MODULE_QUERIES", "RUNS", "register_run"]
 
-#: run name -> query names, in registry insertion order within each run
-RUNS: dict[str, list[str]] = {
-    "strings": ['string_functions', 'null_handling', 'conditional_aggregates', 'having_clause', 'daily_activity', 'correlated_scalar_subquery', 'dense_rank_ntile', 'array_functions'],
-    "regexdate": ['regex_extract_docs', 'date_math_orders'],
-    "stats": ['stats_moments', 'math_functions', 'in_subquery', 'first_last_window', 'percent_rank_cume_dist', 'grouping_indicator'],
-}
-
-#: every query this module owns, in overall registry insertion order
-MODULE_QUERIES: list[str] = [n for names in RUNS.values() for n in names]
-
-_DEFS: dict[str, tuple] = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    """Deferred twin of ``registry_core.register``: collect, don't
-    register — ``register_run`` replays the collected defs at the
-    caller's (position-sensitive) point in registry.py."""
-
-    def deco(fn):
-        _DEFS[name] = (fn, oracle)
-        return fn
-
-    return deco
-
-
-def register_run(run: str) -> None:
-    for n in RUNS[run]:
-        fn, oracle = _DEFS[n]
-        register(n, oracle)(fn)
-
-
-
-# --- run 'strings' -----------------------------------------------------
-
-@_q(
+@register(
     "string_functions",
     """
     SELECT c_custkey,
@@ -83,7 +44,7 @@ def string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@register(
     "null_handling",
     """
     SELECT event_id,
@@ -109,7 +70,7 @@ def null_handling(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@register(
     "conditional_aggregates",
     """
     SELECT user_id,
@@ -137,7 +98,7 @@ def conditional_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@register(
     "having_clause",
     """
     SELECT user_id, COUNT(*) AS n
@@ -152,7 +113,7 @@ def having_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n")).filter(F.col("n") > 60)
 
 
-@_q(
+@register(
     "daily_activity",
     """
     SELECT CAST(ts AS DATE) AS day,
@@ -173,7 +134,7 @@ def daily_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@register(
     "correlated_scalar_subquery",
     """
     SELECT o_orderkey, o_custkey, o_totalprice
@@ -198,7 +159,7 @@ def correlated_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@register(
     "dense_rank_ntile",
     """
     SELECT c_custkey, c_mktsegment, c_acctbal,
@@ -224,7 +185,7 @@ def dense_rank_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@register(
     "array_functions",
     """
     SELECT vec_id,
@@ -251,9 +212,7 @@ def array_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- run 'regexdate' ---------------------------------------------------
-
-@_q(
+@register(
     "regex_extract_docs",
     """
     SELECT doc_id,
@@ -272,7 +231,7 @@ def regex_extract_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@register(
     "date_math_orders",
     """
     SELECT o_orderkey,
@@ -303,9 +262,7 @@ def date_math_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- run 'stats' -------------------------------------------------------
-
-@_q(
+@register(
     "stats_moments",
     """
     SELECT l_returnflag,
@@ -331,7 +288,7 @@ def stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@register(
     "math_functions",
     """
     SELECT event_id,
@@ -363,7 +320,7 @@ def math_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@register(
     "in_subquery",
     """
     SELECT o_orderkey, o_custkey, o_totalprice
@@ -386,7 +343,7 @@ def in_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@register(
     "first_last_window",
     """
     SELECT event_id, user_id, ts, value,
@@ -419,7 +376,7 @@ def first_last_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@register(
     "percent_rank_cume_dist",
     """
     SELECT c_custkey, c_mktsegment,
@@ -445,7 +402,7 @@ def percent_rank_cume_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@register(
     "grouping_indicator",
     """
     SELECT o_orderstatus, o_orderpriority,

@@ -1,9 +1,9 @@
-"""K-means clustering-family registrations (split from registry.py, r13
-verdict ask #9).  Imported by ``registry`` at the exact position the
-block previously occupied — QUERIES insertion order is unchanged (see
-tests/test_registry_split.py).  Contents: the adaptive k-means envelope
-row, the fixed-seed assignment twin, the pinned-Lloyd centroid matrix,
-and the exact-integer inertia quality row."""
+"""K-means clustering-family registrations: the adaptive k-means
+envelope row, the fixed-seed assignment twin, the pinned-Lloyd centroid
+matrix, and the exact-integer inertia quality row.
+
+Queries register on import through ``registry_core.register``.
+"""
 
 from __future__ import annotations
 
@@ -13,15 +13,6 @@ from pyspark.sql import functions as F
 from .registry_core import register
 from .sources.readers import load_table
 
-__all__ = ["MODULE_QUERIES"]
-
-#: registration order within this module (order-preserving anchor)
-MODULE_QUERIES = [
-    "kmeans_assignments",
-    "kmeans_assignments_fixed",
-    "kmeans_centroids_fixed",
-    "kmeans_inertia_fixed",
-]
 
 @register(
     "kmeans_assignments",

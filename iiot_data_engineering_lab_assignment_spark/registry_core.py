@@ -1,13 +1,11 @@
 """Registration machinery shared by ``registry`` and the family modules
-(registry_similarity / registry_graph / registry_clustering /
-registry_curation_text).
+(``registry_*``).
 
-Split out (r14) so family modules never import ``registry`` itself:
-with the machinery living here, importing a family module directly is
-safe — it registers just its own family instead of triggering the
-circular import that would skip the position-sensitive bridge and blow
-the DRIVER_WINDOW completeness check.  ``registry`` remains the
-entrypoint that registers everything (and re-exports these names, so
+Every query enters ``QUERIES`` one way: ``@register`` at import time.
+Family modules import this module, never ``registry``, so importing one
+directly registers just its own rows.  ``registry`` imports every family
+module, adds its own rows, then moves ``DRIVER_WINDOW`` to the front —
+the only ordering policy (it also re-exports these names, so
 ``registry.QUERIES`` / ``registry.register`` keep working).
 """
 
@@ -33,6 +31,8 @@ QUERIES: dict[str, QuerySpec] = {}
 
 def register(name: str, oracle: str | None = None):
     def deco(fn: QueryFn) -> QueryFn:
+        if name in QUERIES:  # a second copy would overwrite the first silently
+            raise ValueError(f"query already registered: {name!r}")
         QUERIES[name] = QuerySpec(fn, oracle)
         return fn
 

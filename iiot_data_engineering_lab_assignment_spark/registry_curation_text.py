@@ -1,11 +1,11 @@
-"""Corpus-curation / tokenizer-training registrations (split from
-registry.py, r13 verdict ask #9): exact-substring span dedup (Lee et
-al. 2107.06499) and the span-first curation pipeline, the BPE trainer
-family (pair statistic, 2-merge and 16-merge learned tables, apply /
-compression-filter rows), the inverted-index builds (flat gap-encoded
-and doc-sharded), and the shuffle-key skew profiler.  Imported by
-``registry`` at the position the block previously occupied — QUERIES
-insertion order is unchanged (tests/test_registry_split.py)."""
+"""Corpus-curation / tokenizer-training registrations: exact-substring
+span dedup (Lee et al. 2107.06499) and the span-first curation pipeline,
+the BPE trainer family (pair statistic, 2-merge and 16-merge learned
+tables, apply / compression-filter rows), the inverted-index builds
+(flat gap-encoded and doc-sharded), and the shuffle-key skew profiler.
+
+Queries register on import through ``registry_core.register``.
+"""
 
 from __future__ import annotations
 
@@ -36,24 +36,6 @@ def build_survivor_set(docs: DataFrame) -> DataFrame:
     gated = quality_score(clean).filter(F.col("quality_score") >= 0.5)
     return exact_dedup_keep_first_fp(gated.select("doc_id", "text"))
 
-__all__ = ["MODULE_QUERIES"]
-
-#: registration order within this module (order-preserving anchor)
-MODULE_QUERIES = [
-    "exact_substring_spans",
-    "exact_substring_dedup",
-    "corpus_curation_pipeline_spans",
-    "bpe_merge_pair_counts",
-    "bpe_learned_merges16",
-    "bpe_learned_merges64",
-    "bpe_learned_merges",
-    "bpe_segment_counts",
-    "bpe_compression_by_source",
-    "inverted_index_gaps",
-    "event_key_skew_profile",
-    "inverted_index_sharded",
-    "curation_e2e_composed",
-]
 
 # the positional-fingerprint-chain substring dedup as shared CTEs: k=8
 # word-gram md5 fingerprints, corpus-first-occurrence via min(doc*2^20+pos),

@@ -1,11 +1,11 @@
-"""Graph-analytics registrations (split from registry.py, r13 verdict
-ask #9): fixed-iteration PageRank (+ the bucketed edge catalog and the
-shared _pagerank_rounds propagation), degree-ordered triangle counting
-with the hot-basket cap, label propagation, and the two planted-graph
-quality envelopes (LPA pair precision/recall; PageRank rank order —
-the r14 row registers here, next to the family it certifies).
-Imported by ``registry`` at the position the r8 graph block occupied;
-pre-r14 QUERIES order is unchanged (tests/test_registry_split.py)."""
+"""Graph-analytics registrations: fixed-iteration PageRank (+ the
+bucketed edge catalog and the shared _pagerank_rounds propagation),
+degree-ordered triangle counting with the hot-basket cap, label
+propagation, and the two planted-graph quality envelopes (LPA pair
+precision/recall; PageRank rank order).
+
+Queries register on import through ``registry_core.register``.
+"""
 
 from __future__ import annotations
 
@@ -15,16 +15,6 @@ from pyspark.sql import functions as F
 from .registry_core import register
 from .sources.readers import load_table
 
-__all__ = ["MODULE_QUERIES"]
-
-#: registration order within this module (order-preserving anchor)
-MODULE_QUERIES = [
-    "pagerank_supplier_customer",
-    "triangle_counts_copurchase",
-    "label_propagation_communities",
-    "lpa_planted_quality",
-    "pagerank_planted_quality",
-]
 
 _PAGERANK_SQL = """
     WITH edges AS (

@@ -1,18 +1,11 @@
-"""PQ / IVF-PQ similarity-family registrations (split from registry.py,
-r13 verdict ask #9 — the main module was past 15k LoC).
+"""PQ / IVF-PQ similarity-family registrations (all oracle-backed): the
+pinned PQ encoder and its GEMM tier, ADC serving (fold + GEMM), the
+trained-codebook family (train/encode/serve/kNN/recall + the 64x8 GEMM
+trainer), the kNN label eval, and the IVF-PQ serving stack (inline /
+stored / incremental upsert) with their mtime-keyed store helpers.
+Nothing here runs Spark at import.
 
-This module is imported by ``registry`` at the exact position the block
-previously occupied, so QUERIES insertion order is byte-identical to the
-pre-split registry (order-preserving test in tests/test_registry_split.py).
-At import time ``registry`` is partially initialized but ``register`` /
-``load_table`` / the F alias are already bound, so the import-back is
-safe; nothing here runs Spark at import.
-
-Family contents (all oracle-backed): the pinned PQ encoder and its GEMM
-tier, ADC serving (fold + GEMM), the trained-codebook family
-(train/encode/serve/kNN/recall + the 64x8 GEMM trainer), the kNN label
-eval, and the IVF-PQ serving stack (inline / stored / incremental
-upsert) with their mtime-keyed store helpers.
+Queries register on import through ``registry_core.register``.
 """
 
 from __future__ import annotations
@@ -23,25 +16,6 @@ from pyspark.sql import functions as F
 from .registry_core import register
 from .sources.readers import load_table
 
-__all__ = ["SIMILARITY_QUERIES"]
-
-#: registration order within this module (order-preserving test anchor)
-SIMILARITY_QUERIES = [
-    "pq_codes_fixed",
-    "knn_label_eval",
-    "pq_codes_gemm",
-    "pq_adc_topk",
-    "pq_adc_topk_gemm",
-    "pq_codebook_trained",
-    "pq_codebook_trained_gemm",
-    "pq_codes_trained",
-    "pq_adc_topk_trained",
-    "pq_adc_knn_trained",
-    "pq_recall_trained_vs_exact",
-    "ivf_pq_topk",
-    "ivf_pq_topk_stored",
-    "ivf_pq_topk_upsert",
-]
 
 _PQ_CTES = """
     WITH e AS (
@@ -401,8 +375,6 @@ def _trained_book(
                  generate_subscripts(cv, 1) AS i FROM ct)
     """,
 )
-
-
 
 
 def pq_codebook_trained_q(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -2,61 +2,19 @@
 heavy-hitters envelope, Count-Min, KMV set algebra (+ streaming
 KMV store), and the mergeable histogram quantile sketch.
 
-Split from registry.py (r14 verdict ask #7, continued in r15) with
-DEFERRED registration — the registry_tpch/registry_timeseries pattern:
-importing this module registers NOTHING; ``registry`` calls
-:func:`register_run` at the exact position each run's block previously
-occupied, keeping ``QUERIES`` insertion order byte-identical.  Family
-modules import ``registry_core``, never ``registry``.
+Queries register on import through ``registry_core.register``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .registry_core import QueryFn, davg, dsum, register  # noqa: F401
+from .registry_core import register
 from .sources.readers import load_table
 
-__all__ = ["MODULE_QUERIES", "RUNS", "register_run"]
 
-#: run name -> query names, in registry insertion order within each run
-RUNS: dict[str, list[str]] = {
-    "hll": ['hll_distinct_merge', 'approx_distinct_users'],
-    "heavyhitters": ['heavy_hitters_envelope'],
-    "countmin": ['countmin_heavy_users'],
-    "kmv": ['kmv_user_overlap_event_types', 'stream_kmv_distinct_store'],
-    "histogram": ['histogram_quantile_sketch'],
-}
-
-#: every query this module owns, in overall registry insertion order
-MODULE_QUERIES: list[str] = [n for names in RUNS.values() for n in names]
-
-_DEFS: dict[str, tuple] = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    """Deferred twin of ``registry_core.register``: collect, don't
-    register — ``register_run`` replays the collected defs at the
-    caller's (position-sensitive) point in registry.py."""
-
-    def deco(fn):
-        _DEFS[name] = (fn, oracle)
-        return fn
-
-    return deco
-
-
-def register_run(run: str) -> None:
-    for n in RUNS[run]:
-        fn, oracle = _DEFS[n]
-        register(n, oracle)(fn)
-
-
-
-# --- run 'hll' ---------------------------------------------------------
-
-@_q(
+@register(
     "hll_distinct_merge",
     """
     SELECT event_type,
@@ -123,7 +81,7 @@ def hll_distinct_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@register(
     "approx_distinct_users",
     """
     SELECT event_type,
@@ -163,9 +121,7 @@ def approx_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- run 'heavyhitters' ------------------------------------------------
-
-@_q(
+@register(
     "heavy_hitters_envelope",
     """
     SELECT event_type,
@@ -216,9 +172,7 @@ def heavy_hitters_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- run 'countmin' ----------------------------------------------------
-
-@_q(
+@register(
     "countmin_heavy_users",
     """
     WITH js AS (
@@ -295,9 +249,6 @@ def countmin_heavy_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- run 'kmv' ---------------------------------------------------------
-
-
 #: DuckDB mirror of operators.aggregates.kmv_hash52 — the md5 family is
 #: the cross-engine-checkable tier (the production tier would swap in
 #: xxhash64, exactly as minhash_lsh_pairs_md5 vs the xxhash64 path).
@@ -307,7 +258,7 @@ _KMV_SQL_HASH = (
 )
 
 
-@_q(
+@register(
     "kmv_user_overlap_event_types",
     f"""
     WITH du AS (
@@ -509,7 +460,7 @@ def kmv_user_overlap_event_types_q(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-@_q(
+@register(
     "stream_kmv_distinct_store",
     f"""
     WITH du AS (
@@ -551,9 +502,7 @@ def stream_kmv_distinct_store_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_kmv_estimates(spark, store)
 
 
-# --- run 'histogram' ---------------------------------------------------
-
-@_q(
+@register(
     "histogram_quantile_sketch",
     """
     WITH ev AS (

@@ -2,69 +2,22 @@
 linear interpolation), robust anomalies, time-weighted averages,
 counter-rate resets, seasonal residuals, rolling distinct/slope,
 trend/autocorr/CUSUM drift, SAX words, and binary-segmentation
-change points (depths 1 and 2).
+change points (depths 1 and 2) — the TimescaleDB hypertable surface of
+the reference's storage layer as pure DataFrame plans.
 
-Split from registry.py (r14 verdict ask #7) with DEFERRED registration:
-importing this module registers NOTHING — each query body is collected
-into ``_DEFS`` by the local ``@_q`` decorator, and ``registry`` calls
-:func:`register_run` at the exact position the run's block previously
-occupied, so ``QUERIES`` insertion order is byte-identical to the
-pre-split registry (the TPC-H / time-series registrations were never
-contiguous, which is why the position-sensitive-import pattern the
-other family modules use cannot express this split).  Family modules
-import ``registry_core``, never ``registry``.
+Queries register on import through ``registry_core.register``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .registry_core import QueryFn, davg, dsum, register  # noqa: F401
+from .registry_core import register
 from .sources.readers import load_table
 
-__all__ = ["MODULE_QUERIES", "RUNS", "register_run"]
 
-#: run name -> query names, in registry insertion order within each run
-RUNS: dict[str, list[str]] = {
-    "ewma": ['ewma_sensor_state'],
-    "sensors": ['latest_reading_per_sensor', 'sensor_gap_report', 'gapfill_locf_daily', 'zscore_anomalies', 'mad_anomalies', 'time_weighted_avg'],
-    "interp": ['gapfill_interpolate_daily'],
-    "rates": ['counter_rate_resets', 'seasonal_residual_anomalies', 'rolling_distinct_users'],
-    "drift": ['changepoint_by_type', 'linear_trend_per_type', 'autocorr_lag1_per_type', 'cusum_drift_per_user'],
-    "rolling": ['rolling_slope_24h_per_user', 'seasonal_naive_mase_by_type'],
-    "sax": ['sax_words_daily'],
-    "changepoint2": ['changepoint2_by_type'],
-}
-
-#: every query this module owns, in overall registry insertion order
-MODULE_QUERIES: list[str] = [n for names in RUNS.values() for n in names]
-
-_DEFS: dict[str, tuple] = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    """Deferred twin of ``registry_core.register``: collect, don't
-    register — ``register_run`` replays the collected defs at the
-    caller's (position-sensitive) point in registry.py."""
-
-    def deco(fn):
-        _DEFS[name] = (fn, oracle)
-        return fn
-
-    return deco
-
-
-def register_run(run: str) -> None:
-    for n in RUNS[run]:
-        fn, oracle = _DEFS[n]
-        register(n, oracle)(fn)
-
-
-
-# --- run 'ewma' --------------------------------------------------------
-
-@_q(
+@register(
     "ewma_sensor_state",
     """
     WITH daily AS (
@@ -127,9 +80,7 @@ def ewma_sensor_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- run 'sensors' -----------------------------------------------------
-
-@_q(
+@register(
     "latest_reading_per_sensor",
     """
     SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS last_ts,
@@ -167,7 +118,7 @@ def latest_reading_per_sensor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@register(
     "sensor_gap_report",
     """
     SELECT user_id, prev_ts AS gap_start, ts AS gap_end, gap_us
@@ -210,7 +161,7 @@ def sensor_gap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@register(
     "gapfill_locf_daily",
     """
     WITH bounds AS (
@@ -270,7 +221,7 @@ def gapfill_locf_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@register(
     "zscore_anomalies",
     """
     WITH stats AS (
@@ -320,7 +271,7 @@ def zscore_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@register(
     "mad_anomalies",
     """
     WITH q AS (
@@ -399,7 +350,7 @@ def mad_anomalies_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@register(
     "time_weighted_avg",
     """
     WITH seg AS (
@@ -456,9 +407,7 @@ def time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # multi-table predicates (Q19) — adapted to the fixture columns.
 
 
-# --- run 'interp' ------------------------------------------------------
-
-@_q(
+@register(
     "gapfill_interpolate_daily",
     """
     WITH bounds AS (
@@ -581,9 +530,7 @@ def gapfill_interpolate_daily_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- run 'rates' -------------------------------------------------------
-
-@_q(
+@register(
     "counter_rate_resets",
     """
     WITH s AS (
@@ -645,7 +592,7 @@ def counter_rate_resets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@register(
     "seasonal_residual_anomalies",
     """
     WITH stats AS (
@@ -714,7 +661,7 @@ def seasonal_residual_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@register(
     "rolling_distinct_users",
     """
     SELECT event_id, event_type,
@@ -848,9 +795,7 @@ def rolling_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- run 'drift' -------------------------------------------------------
-
-@_q(
+@register(
     "changepoint_by_type",
     """
     WITH daily AS (
@@ -991,7 +936,7 @@ def changepoint_by_type_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@register(
     "linear_trend_per_type",
     """
     WITH pts AS (
@@ -1077,7 +1022,7 @@ def linear_trend_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@register(
     "autocorr_lag1_per_type",
     """
     WITH lagged AS (
@@ -1191,7 +1136,7 @@ def autocorr_lag1_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@register(
     "cusum_drift_per_user",
     """
     WITH base AS (
@@ -1311,9 +1256,7 @@ def cusum_drift_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- run 'rolling' -----------------------------------------------------
-
-@_q(
+@register(
     "rolling_slope_24h_per_user",
     """
     WITH pts AS (
@@ -1410,7 +1353,7 @@ def rolling_slope_24h_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@register(
     "seasonal_naive_mase_by_type",
     """
     WITH hourly AS (
@@ -1529,9 +1472,7 @@ def seasonal_naive_mase_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- run 'sax' ---------------------------------------------------------
-
-@_q(
+@register(
     "sax_words_daily",
     """
     WITH bins AS (
@@ -1602,9 +1543,7 @@ def sax_words_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- run 'changepoint2' ------------------------------------------------
-
-@_q(
+@register(
     "changepoint2_by_type",
     """
     WITH daily AS (

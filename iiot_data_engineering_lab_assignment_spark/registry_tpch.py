@@ -1,66 +1,24 @@
-"""TPC-H Q1-Q22 + the extended relational surface (SURVEY.md section 2.6).
+"""TPC-H Q1-Q22 + the extended relational surface (SURVEY.md section 2.6):
+joins / sorts / top-k / set ops / distinct / rollup / analytic windows on
+the TPC-H-ish star schema, and the planner-stress shapes (decorrelated
+scalar subqueries, multi semi/anti self-joins).  The fixture has no
+partsupp/l_commitdate, so Q2 derives a partsupp analog from lineitem and
+Q21 defines "late" as shipping >60 days after the order date.
 
-Split from registry.py (r14 verdict ask #7) with DEFERRED registration:
-importing this module registers NOTHING — each query body is collected
-into ``_DEFS`` by the local ``@_q`` decorator, and ``registry`` calls
-:func:`register_run` at the exact position the run's block previously
-occupied, so ``QUERIES`` insertion order is byte-identical to the
-pre-split registry (the TPC-H / time-series registrations were never
-contiguous, which is why the position-sensitive-import pattern the
-other family modules use cannot express this split).  Family modules
-import ``registry_core``, never ``registry``.
+Queries register on import through ``registry_core.register``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .registry_core import QueryFn, davg, dsum, register  # noqa: F401
+from .registry_core import davg, dsum, register
 from .sources.readers import load_table
 from .operators.joins import anti_join, join_dim, join_fact, semi_join
 
-__all__ = ["MODULE_QUERIES", "RUNS", "register_run"]
 
-#: run name -> query names, in registry insertion order within each run
-RUNS: dict[str, list[str]] = {
-    "rel": ['q1_pricing_summary', 'top_orders', 'customer_order_revenue', 'region_customer_count', 'semi_join_customers', 'anti_join_customers', 'left_join_order_counts', 'distinct_nations_per_segment', 'rollup_order_totals', 'cube_status_priority', 'rank_orders_per_customer', 'lag_delta_per_user', 'moving_avg_per_user', 'set_intersect_buyers', 'set_except_inactive', 'union_high_value_parties', 'order_lineitem_join_agg'],
-    "shipping": ['q3_shipping_priority', 'q5_local_supplier_volume'],
-    "priority": ['q4_order_priority_checking', 'q12_priority_by_ship_month', 'q14_promo_revenue', 'q18_large_volume_customers', 'q19_disjunctive_revenue'],
-    "suppliers": ['q2_min_cost_supplier', 'q21_waiting_suppliers', 'q10_returned_item_customers', 'q7_two_nation_volume'],
-    "forecast": ['q6_forecast_revenue', 'q13_customer_order_distribution', 'q15_top_supplier', 'q17_small_quantity_revenue', 'q22_idle_balance_customers'],
-    "share": ['q8_market_share', 'q9_product_type_profit'],
-    "stock": ['q11_important_stock', 'q16_supplier_part_counts', 'q20_excess_stock_suppliers'],
-}
-
-#: every query this module owns, in overall registry insertion order
-MODULE_QUERIES: list[str] = [n for names in RUNS.values() for n in names]
-
-_DEFS: dict[str, tuple] = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    """Deferred twin of ``registry_core.register``: collect, don't
-    register — ``register_run`` replays the collected defs at the
-    caller's (position-sensitive) point in registry.py."""
-
-    def deco(fn):
-        _DEFS[name] = (fn, oracle)
-        return fn
-
-    return deco
-
-
-def register_run(run: str) -> None:
-    for n in RUNS[run]:
-        fn, oracle = _DEFS[n]
-        register(n, oracle)(fn)
-
-
-
-# --- run 'rel' ---------------------------------------------------------
-
-@_q(
+@register(
     "q1_pricing_summary",
     """
     SELECT l_returnflag, l_linestatus,
@@ -105,7 +63,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@register(
     "top_orders",
     """
     SELECT o_orderkey, o_custkey, o_totalprice, o_orderdate
@@ -126,7 +84,7 @@ def top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@register(
     "customer_order_revenue",
     """
     SELECT c_custkey, c_name,
@@ -148,7 +106,7 @@ def customer_order_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@register(
     "region_customer_count",
     """
     SELECT r_name, COUNT(*) AS customer_cnt,
@@ -174,7 +132,7 @@ def region_customer_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@register(
     "semi_join_customers",
     """
     SELECT c_custkey, c_name, c_mktsegment
@@ -193,7 +151,7 @@ def semi_join_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@register(
     "anti_join_customers",
     """
     SELECT c_custkey, c_name
@@ -209,7 +167,7 @@ def anti_join_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return anti_join(c, o, c.c_custkey == o.o_custkey).select("c_custkey", "c_name")
 
 
-@_q(
+@register(
     "left_join_order_counts",
     """
     SELECT c_custkey, COUNT(o_orderkey) AS order_cnt
@@ -226,7 +184,7 @@ def left_join_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return joined.groupBy("c_custkey").agg(F.count("o_orderkey").alias("order_cnt"))
 
 
-@_q(
+@register(
     "distinct_nations_per_segment",
     """
     SELECT c_mktsegment,
@@ -246,7 +204,7 @@ def distinct_nations_per_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@register(
     "rollup_order_totals",
     """
     SELECT o_orderstatus, o_orderpriority,
@@ -274,7 +232,7 @@ def rollup_order_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@register(
     "cube_status_priority",
     """
     SELECT o_orderstatus, o_orderpriority, COUNT(*) AS count_rows
@@ -290,7 +248,7 @@ def cube_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@register(
     "rank_orders_per_customer",
     """
     SELECT o_custkey, o_orderkey, o_totalprice
@@ -314,7 +272,7 @@ def rank_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@register(
     "lag_delta_per_user",
     """
     SELECT event_id, user_id, ts, value,
@@ -340,7 +298,7 @@ def lag_delta_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@register(
     "moving_avg_per_user",
     """
     SELECT event_id, user_id, ts,
@@ -365,7 +323,7 @@ def moving_avg_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@register(
     "set_intersect_buyers",
     """
     SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
@@ -385,7 +343,7 @@ def set_intersect_buyers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return left.intersect(right)
 
 
-@_q(
+@register(
     "set_except_inactive",
     """
     SELECT c_custkey FROM customer WHERE c_mktsegment = 'MACHINERY'
@@ -405,7 +363,7 @@ def set_except_inactive(spark: SparkSession, sf_dir: str) -> DataFrame:
     return left.exceptAll(right).distinct()
 
 
-@_q(
+@register(
     "union_high_value_parties",
     """
     SELECT * FROM (
@@ -434,7 +392,7 @@ def union_high_value_parties(spark: SparkSession, sf_dir: str) -> DataFrame:
     return left.unionAll(right)
 
 
-@_q(
+@register(
     "order_lineitem_join_agg",
     """
     SELECT o_orderpriority,
@@ -466,9 +424,7 @@ def order_lineitem_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- run 'shipping' ----------------------------------------------------
-
-@_q(
+@register(
     "q3_shipping_priority",
     """
     SELECT l_orderkey,
@@ -513,7 +469,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@register(
     "q5_local_supplier_volume",
     """
     SELECT n_name,
@@ -565,9 +521,7 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- run 'priority' ----------------------------------------------------
-
-@_q(
+@register(
     "q4_order_priority_checking",
     """
     SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS order_count
@@ -600,7 +554,7 @@ def q4_order_priority_checking(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@register(
     "q12_priority_by_ship_month",
     """
     SELECT CAST(date_trunc('month', l_shipdate) AS DATE) AS ship_month,
@@ -634,7 +588,7 @@ def q12_priority_by_ship_month(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@register(
     "q14_promo_revenue",
     """
     SELECT ROUND(
@@ -679,7 +633,7 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@register(
     "q18_large_volume_customers",
     """
     SELECT c_custkey, o_orderkey, o_totalprice,
@@ -718,7 +672,7 @@ def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@register(
     "q19_disjunctive_revenue",
     """
     SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))
@@ -752,9 +706,7 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     return j.filter(cond).agg(F.sum(dp).cast("double").alias("revenue"))
 
 
-# --- run 'suppliers' ---------------------------------------------------
-
-@_q(
+@register(
     "q2_min_cost_supplier",
     """
     WITH ps AS (
@@ -816,7 +768,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@register(
     "q21_waiting_suppliers",
     """
     WITH l AS (
@@ -884,7 +836,7 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@register(
     "q10_returned_item_customers",
     """
     SELECT c_custkey, c_name, n_name,
@@ -935,7 +887,7 @@ def q10_returned_item_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@register(
     "q7_two_nation_volume",
     """
     SELECT supp_nation, cust_nation, l_year,
@@ -1002,9 +954,7 @@ def q7_two_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- run 'forecast' ----------------------------------------------------
-
-@_q(
+@register(
     "q6_forecast_revenue",
     """
     SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))
@@ -1035,7 +985,7 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@register(
     "q13_customer_order_distribution",
     """
     SELECT c_count, CAST(COUNT(*) AS BIGINT) AS custdist
@@ -1068,7 +1018,7 @@ def q13_customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFra
     return per_cust.groupBy("c_count").agg(F.count(F.lit(1)).alias("custdist"))
 
 
-@_q(
+@register(
     "q15_top_supplier",
     """
     WITH revenue AS (
@@ -1114,7 +1064,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@register(
     "q17_small_quantity_revenue",
     """
     WITH stats AS (
@@ -1159,7 +1109,7 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@register(
     "q22_idle_balance_customers",
     """
     WITH pool AS (
@@ -1208,9 +1158,7 @@ def q22_idle_balance_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- run 'share' -------------------------------------------------------
-
-@_q(
+@register(
     "q8_market_share",
     """
     WITH base AS (
@@ -1292,7 +1240,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@register(
     "q9_product_type_profit",
     """
     SELECT supp_nation, o_year, CAST(SUM(profit) AS DOUBLE) AS total_profit
@@ -1350,9 +1298,7 @@ def q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- run 'stock' -------------------------------------------------------
-
-@_q(
+@register(
     "q11_important_stock",
     """
     WITH ps AS (
@@ -1405,7 +1351,7 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@register(
     "q16_supplier_part_counts",
     """
     WITH bad AS (
@@ -1446,7 +1392,7 @@ def q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@register(
     "q20_excess_stock_suppliers",
     """
     WITH shipped AS (

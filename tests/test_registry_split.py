@@ -1,130 +1,83 @@
-"""r13 verdict ask #9: registry.py split into family modules
-(registry_similarity / registry_graph / registry_clustering /
-registry_curation_text), each imported by the main module at the exact
-position its block previously occupied so QUERIES insertion order is
-unchanged.  These tests pin that contract so a future refactor cannot
-silently drop or reorder a family."""
+"""The registry contract, read from ``QUERIES`` itself: the pinned name
+set, which module owns each row, oracle coverage, and that every family
+module registers exactly its own rows when imported on its own."""
 
 from __future__ import annotations
 
-from iiot_data_engineering_lab_assignment_spark import (
-    registry,
-    registry_clustering,
-    registry_curation_text,
-    registry_graph,
-    registry_breadth,
-    registry_similarity,
-    registry_sketches,
-    registry_timeseries,
-    registry_tpch,
-)
+import hashlib
+import subprocess
+import sys
+from collections import Counter
+from pathlib import Path
 
-FAMILY_MODULES = {
-    "similarity": registry_similarity.SIMILARITY_QUERIES,
-    "graph": registry_graph.MODULE_QUERIES,
-    "clustering": registry_clustering.MODULE_QUERIES,
-    "curation_text": registry_curation_text.MODULE_QUERIES,
-    "tpch": registry_tpch.MODULE_QUERIES,
-    "timeseries": registry_timeseries.MODULE_QUERIES,
-    "breadth": registry_breadth.MODULE_QUERIES,
-    "sketches": registry_sketches.MODULE_QUERIES,
+import pytest
+
+from iiot_data_engineering_lab_assignment_spark import registry
+from iiot_data_engineering_lab_assignment_spark.registry_core import register
+
+PKG = "iiot_data_engineering_lab_assignment_spark"
+ROOT = Path(__file__).resolve().parents[1]
+
+MODULE_COUNTS = {
+    "registry": 172,
+    "registry_tpch": 38,
+    "registry_timeseries": 19,
+    "registry_breadth": 16,
+    "registry_similarity": 14,
+    "registry_curation_text": 13,
+    "registry_sketches": 7,
+    "registry_graph": 5,
+    "registry_clustering": 4,
 }
 
 
-def test_family_modules_registered_with_oracles():
-    """Every family-module query is in QUERIES and oracle-backed."""
-    for fam, names in FAMILY_MODULES.items():
-        for n in names:
-            assert n in registry.QUERIES, (fam, n)
-            assert registry.QUERIES[n].oracle is not None, (fam, n)
-
-
-def test_family_modules_preserve_relative_order():
-    """Within each family module, QUERIES preserves the module's
-    registration order (the position-sensitive import contract)."""
-    all_names = list(registry.QUERIES)
-    for fam, names in FAMILY_MODULES.items():
-        idx = [all_names.index(n) for n in names]
-        # relative order among non-window names must match registration
-        # order; window membership may pull individual rows forward, so
-        # compare only the tail residents
-        window = set(registry.DRIVER_WINDOW)
-        tail_idx = [all_names.index(n) for n in names if n not in window]
-        assert tail_idx == sorted(tail_idx), (fam, idx)
-
-
-def test_direct_family_import_is_safe():
-    """r14 regression: importing a family module FIRST (before registry)
-    must not crash.  Pre-fix, the family's `from .registry import
-    register` triggered the full registry import, whose position-
-    sensitive bridge saw the half-initialized family module as already
-    imported, skipped its registrations, and blew the DRIVER_WINDOW
-    completeness check.  With the machinery in registry_core the direct
-    import registers just that family, no circularity."""
-    import subprocess
-    import sys
-
-    code = (
-        "import iiot_data_engineering_lab_assignment_spark.registry_graph as g;"
-        "from iiot_data_engineering_lab_assignment_spark.registry_core import QUERIES;"
-        "assert set(g.MODULE_QUERIES) <= set(QUERIES);"
-        "print('ok')"
-    )
-    out = subprocess.run(
-        [sys.executable, "-c", code],
-        capture_output=True,
-        text=True,
-        cwd="/root/repo",
-    )
-    assert out.returncode == 0, out.stderr[-800:]
-    assert out.stdout.strip() == "ok"
+def test_registry_name_set_is_pinned():
+    """The 288 names are the public surface ``__spark_entry__.py``
+    exposes; any add/drop/rename moves the digest."""
+    names = sorted(registry.QUERIES)
+    assert len(names) == 288
+    digest = hashlib.sha256("\n".join(names).encode()).hexdigest()
+    assert digest.startswith("d022d04d78aab3c1"), digest
 
 
 def test_no_family_overlap_and_counts():
-    """Family modules are disjoint and cover the expected row counts."""
-    seen: set[str] = set()
-    for names in FAMILY_MODULES.values():
-        assert not (seen & set(names))
-        seen |= set(names)
-    assert len(FAMILY_MODULES["similarity"]) == 14
-    assert len(FAMILY_MODULES["graph"]) == 5
-    assert len(FAMILY_MODULES["clustering"]) == 4
-    assert len(FAMILY_MODULES["curation_text"]) == 13
-    assert len(FAMILY_MODULES["tpch"]) == 38
-    assert len(FAMILY_MODULES["timeseries"]) == 19
-    assert len(FAMILY_MODULES["breadth"]) == 16
-    assert len(FAMILY_MODULES["sketches"]) == 7
-
-
-def test_deferred_family_import_registers_nothing():
-    """The r15 deferred-registration modules (tpch / timeseries) must be
-    import-safe AND side-effect-free: importing one directly collects
-    defs but registers no queries (registration happens only via
-    registry.py's position-sensitive register_run calls)."""
-    import subprocess
-    import sys
-
-    code = (
-        "import iiot_data_engineering_lab_assignment_spark.registry_tpch as t;"
-        "from iiot_data_engineering_lab_assignment_spark.registry_core import QUERIES;"
-        "assert not (set(t.MODULE_QUERIES) & set(QUERIES));"
-        "assert set(t.MODULE_QUERIES) == set(t._DEFS);"
-        "import iiot_data_engineering_lab_assignment_spark.registry_timeseries as ts;"
-        "assert set(ts.MODULE_QUERIES) == set(ts._DEFS);"
-        "import iiot_data_engineering_lab_assignment_spark.registry_breadth as br;"
-        "assert set(br.MODULE_QUERIES) == set(br._DEFS);"
-        "import iiot_data_engineering_lab_assignment_spark.registry_sketches as sk;"
-        "assert set(sk.MODULE_QUERIES) == set(sk._DEFS);"
-        "from iiot_data_engineering_lab_assignment_spark import registry;"
-        "assert set(t.MODULE_QUERIES) <= set(registry.QUERIES);"
-        "assert set(ts.MODULE_QUERIES) <= set(registry.QUERIES);"
-        "print('ok')"
+    """Each row is owned by the module that defines its query function.
+    Overlap cannot happen silently: ``register`` refuses a second copy."""
+    owners = Counter(
+        spec.fn.__module__.rsplit(".", 1)[1] for spec in registry.QUERIES.values()
     )
-    out = subprocess.run(
-        [sys.executable, "-c", code],
-        capture_output=True,
-        text=True,
-        cwd="/root/repo",
-    )
-    assert out.returncode == 0, out.stderr[-800:]
-    assert out.stdout.strip() == "ok"
+    assert dict(owners) == MODULE_COUNTS
+
+
+def test_family_modules_registered_with_oracles():
+    """Every registered query is oracle-backed."""
+    missing = [n for n, spec in registry.QUERIES.items() if spec.oracle is None]
+    assert not missing
+
+
+def test_register_refuses_duplicate_name():
+    name = "test_registry_split_duplicate_probe"
+    register(name)(lambda spark, sf_dir: None)
+    try:
+        with pytest.raises(ValueError, match=name):
+            register(name)(lambda spark, sf_dir: None)
+    finally:
+        registry.QUERIES.pop(name)
+
+
+def test_direct_family_import_is_safe():
+    """Importing a family module FIRST, in a fresh interpreter, must not
+    crash (a family module that imported ``registry`` would re-enter it
+    half-initialized) and registers exactly that module's rows."""
+    for module in MODULE_COUNTS.keys() - {"registry"}:
+        code = (
+            f"import {PKG}.{module};"
+            f"from {PKG}.registry_core import QUERIES;"
+            "from collections import Counter;"
+            "print(dict(Counter(s.fn.__module__ for s in QUERIES.values())))"
+        )
+        out = subprocess.run(
+            [sys.executable, "-c", code], capture_output=True, text=True, cwd=ROOT
+        )
+        assert out.returncode == 0, (module, out.stderr[-800:])
+        assert out.stdout.strip() == str({f"{PKG}.{module}": MODULE_COUNTS[module]})

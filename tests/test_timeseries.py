@@ -54,7 +54,7 @@ def test_gapfill_locf_semantics(spark, events):
 def test_zscore_partition_independent(spark, events):
     """DECIMAL-summed moments: identical output under different input
     partitionings (the float formula would flip low bits)."""
-    # moved to the deferred-registration timeseries module (r15 split)
+    # the query lives in the time-series family module
     from iiot_data_engineering_lab_assignment_spark.registry_timeseries import (
         zscore_anomalies,
     )
