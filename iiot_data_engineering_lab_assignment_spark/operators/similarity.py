@@ -504,7 +504,7 @@ def cosine_dup_pairs_blocked(
         ]
     )
 
-    def gemm(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def gemm(key, pdf):
         import numpy as np
 
         bi, bj = key
@@ -740,7 +740,7 @@ def semantic_dedup_pairs(
         ]
     )
 
-    def cell_gemm(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def cell_gemm(key, pdf):
         import numpy as np
 
         (cell,) = key

@@ -88,10 +88,15 @@ def sliding_rollup(
 
 
 def session_rollup(
-    df: DataFrame, time_col: str, gap: str, group_cols: list[str], value_col: str = "value"
+    df: DataFrame,
+    time_col: str,
+    gap: str | Column,
+    group_cols: list[str],
+    value_col: str = "value",
 ) -> DataFrame:
     """Session windows (extension; Flink offers SESSION, the reference never
-    uses it).  Gap-based merging via Spark's native session_window."""
+    uses it).  Gap-based merging via Spark's native session_window; a
+    Column ``gap`` gives dynamic per-event gaps."""
     out = df.groupBy(
         F.session_window(time_col, gap).alias("window"), *group_cols
     ).agg(*ROLLUP_AGGS(value_col))

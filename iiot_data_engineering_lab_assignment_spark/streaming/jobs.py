@@ -7,15 +7,18 @@ sinks (create_statement_set, :73-98).
 
 Spark-native equivalents here:
 
-* ``streaming_rollup`` — withWatermark + window() groupBy: the SAME window
-  expression as operators.windows drives batch and stream, so
+* ``streaming_rollup`` — withWatermark, then operators.windows' own
+  rollups: the SAME window expression drives batch and stream, so
   batch/streaming parity (PDF Task 4.2) holds by construction.
 * ``fan_out_two_sinks`` — the K4 multi-sink shape via one foreachBatch
   that persists the micro-batch and writes it twice (single-read
   semantics), the Spark analogue of Flink's statement set.
 * File-source replay with availableNow trigger stands in for Kafka in the
   test environment (same exactly-once + watermark semantics; the Kafka
-  reader in sources.readers swaps in transparently).
+  reader in sources.readers swaps in transparently).  Every replay runs
+  through ``_run_query``, the one bounded runner: it starts the query,
+  waits at most ``REPLAY_TIMEOUT_S``, stops it and restores the session
+  confs.
 
 State scale note: the windowed aggregation keeps one state row per open
 (window x keys) group — bounded by watermark eviction.  At production
@@ -31,7 +34,7 @@ from pathlib import Path
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.aggregates import ROLLUP_AGGS
+from ..operators.windows import session_rollup, tumbling_rollup, windowed_rollup
 from ..session import scratch_dir
 from ..sources.readers import _ensure_session_confs, _table_schema
 
@@ -107,26 +110,10 @@ def streaming_rollup(
     from closed windows (T2).
     """
     group_cols = group_cols or []
+    watermarked = stream.withWatermark(time_col, watermark)
     if session_gap is not None:
-        w = F.session_window(time_col, session_gap)
-    elif slide is not None:
-        w = F.window(time_col, duration, slide)
-    else:
-        w = F.window(time_col, duration)
-    return (
-        stream.withWatermark(time_col, watermark)
-        .groupBy(w.alias("window"), *group_cols)
-        .agg(*ROLLUP_AGGS(value_col))
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            *group_cols,
-            "avg_value",
-            "min_value",
-            "max_value",
-            "count_readings",
-        )
-    )
+        return session_rollup(watermarked, time_col, session_gap, group_cols, value_col)
+    return windowed_rollup(watermarked, time_col, duration, slide, group_cols, value_col)
 
 
 def streaming_enrich_dim(
@@ -185,7 +172,6 @@ def run_events_stream_enriched_rollup(
     spark: SparkSession,
     sf_dir: str,
     duration: str = "1 minute",
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """Stream-static enrichment end-to-end on the events fixture: the
     events stream joins a broadcast user dimension (customer segment +
@@ -215,24 +201,7 @@ def run_events_stream_enriched_rollup(
     agg = streaming_rollup(
         enriched, "ts", duration, "5 seconds", ["segment", "nation", "event_type"]
     )
-    name = f"stream_enrich_{uuid.uuid4().hex[:8]}"
-    ckpt = scratch_dir("ckpt_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(name)
+    return _run_to_memory(agg, "stream_enrich", output_mode="complete")
 
 
 def streaming_dedup(
@@ -263,46 +232,68 @@ def streaming_dedup(
     return s.dropDuplicates(keys)
 
 
-def _run_to_memory(
-    df: DataFrame,
-    prefix: str,
-    output_mode: str = "append",
-    shuffle_partitions: int | None = 8,
-    timeout_s: int = 300,
-) -> DataFrame:
-    """Drive an unstarted streaming DataFrame to a fresh in-memory table
-    with an availableNow trigger and return the materialized result —
-    the shared runner for every replay-to-batch parity query (review
-    r8: this block was hand-copied in four places, and each copy
-    silently returned a PARTIAL table when awaitTermination timed out;
-    now a timeout stops the query and raises).
+REPLAY_TIMEOUT_S = 300
 
-    ``shuffle_partitions`` bounds the state-store partition count for
-    the replay (each state partition carries per-batch commit-file
-    overhead; 32 partitions cost 8.4 s vs 1.5 s at 4 for the same sf0.1
-    replay); the session value is restored afterwards."""
-    spark = df.sparkSession
-    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    ckpt = scratch_dir(f"{prefix}_ckpt_")
+
+def _run_query(
+    spark: SparkSession,
+    writer,
+    checkpoint: str,
+    shuffle_partitions: int | None = None,
+    feed=None,
+) -> None:
+    """The one place this module starts a query (``fan_out_two_sinks``
+    returns its running query by design and starts its own).
+
+    ``writer`` is a configured, unstarted ``DataStreamWriter``.  With
+    ``feed=None`` the query is an availableNow replay: the wait is
+    bounded by ``REPLAY_TIMEOUT_S``, and a replay that does not finish
+    in time is stopped and raises ``TimeoutError`` — a caller must never
+    read a partial sink as the result.  Otherwise the query runs on the
+    default trigger and ``feed(query)`` drives it — the live epoch loop
+    of :func:`run_stream_late_drop_accounting`.  A query failure raises,
+    as awaitTermination does.
+
+    ``shuffle_partitions`` sets the state-store partition count for the
+    run (each state partition carries per-batch commit-file overhead;
+    32 partitions cost 8.4 s vs 1.5 s at 4 for the same sf0.1 replay).
+    Either way the query is stopped and the caller's
+    ``spark.sql.shuffle.partitions`` is restored on return."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     if shuffle_partitions is not None:
         spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     try:
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout_s):
+        writer = writer.option("checkpointLocation", checkpoint)
+        if feed is None:
+            writer = writer.trigger(availableNow=True)
+        q = writer.start()
+        try:
+            if feed is not None:
+                feed(q)
+            elif not q.awaitTermination(REPLAY_TIMEOUT_S):
+                raise TimeoutError(
+                    f"streaming replay {q.name or q.id} did not finish in "
+                    f"{REPLAY_TIMEOUT_S}s"
+                )
+        finally:
             q.stop()
-            raise TimeoutError(
-                f"streaming replay {name!r} did not finish in {timeout_s}s"
-            )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def _run_to_memory(
+    df: DataFrame,
+    prefix: str,
+    output_mode: str = "append",
+) -> DataFrame:
+    """Replay an unstarted streaming DataFrame into a fresh in-memory
+    table through :func:`_run_query` (8 state partitions, fixed into the
+    fresh checkpoint at the first batch) and return the materialized
+    result — the sink of every replay-to-batch parity query."""
+    spark = df.sparkSession
+    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
+    writer = df.writeStream.format("memory").queryName(name).outputMode(output_mode)
+    _run_query(spark, writer, scratch_dir(f"{prefix}_ckpt_"), shuffle_partitions=8)
     return spark.table(name)
 
 
@@ -340,17 +331,14 @@ def run_events_stream_rollup(
     output_mode: str = "complete",
     slide: str | None = None,
     session_gap: str | Column | None = None,
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """Run the full streaming rollup over the events fixture with an
     availableNow trigger and an in-memory sink; returns the materialized
     result.  Complete mode emits every window (open + closed), so the
     result equals the batch rollup exactly — the parity oracle.
 
-    ``state_partitions`` bounds the state-store partition count for this
-    replay: each state partition carries per-batch commit-file overhead,
-    and 32 partitions cost 8.4 s vs 1.5 s at 4 for the same sf0.1 replay.
-    The count is fixed into the checkpoint at first batch (fresh here per
+    The replay runs on 8 state partitions (see :func:`_run_query`); the
+    count is fixed into the checkpoint at first batch (fresh here per
     call); long-running production jobs size it to state volume instead.
     """
     group_cols = group_cols if group_cols is not None else ["user_id", "event_type"]
@@ -358,10 +346,7 @@ def run_events_stream_rollup(
     agg = streaming_rollup(
         stream, "ts", duration, "5 seconds", group_cols, slide=slide, session_gap=session_gap
     )
-    return _run_to_memory(
-        agg, "stream_rollup", output_mode=output_mode,
-        shuffle_partitions=state_partitions,
-    )
+    return _run_to_memory(agg, "stream_rollup", output_mode=output_mode)
 
 
 def run_stream_late_drop_accounting(
@@ -369,7 +354,6 @@ def run_stream_late_drop_accounting(
     sf_dir: str,
     watermark: str = "5 seconds",
     duration: str = "5 minutes",
-    state_partitions: int | None = 4,
 ) -> DataFrame:
     """Watermark late-drop OBSERVABILITY (r14 verdict ask #9): replay the
     events fixture as three ordered micro-batches — (1) every on-time
@@ -403,9 +387,10 @@ def run_stream_late_drop_accounting(
     rows were absorbed); a LIVE query fed epoch-by-epoch with
     ``processAllAvailable`` applies it exactly (297 post-partial-agg
     group rows dropped, absorbed == on-time to the row).  So this
-    runner drives a continuous query per epoch — the same harness shape
-    as tests/test_streaming.py::_run_micro_batches — not
-    ``_run_to_memory``."""
+    runner drives a continuous query per epoch through
+    :func:`_run_query`'s ``feed`` form (4 state partitions) — the same
+    harness shape as tests/test_streaming.py::_run_micro_batches — not
+    the availableNow replay."""
     from ..sources.readers import load_table
 
     ev = load_table(spark, sf_dir, "events")
@@ -426,23 +411,19 @@ def run_stream_late_drop_accounting(
         stream, "ts", duration, watermark, ["event_type"]
     )
     name = f"latedrop_{uuid.uuid4().hex[:8]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", scratch_dir("latedrop_ckpt_"))
-        .start()
-    )
-    try:
+
+    def feed(q) -> None:
         for epoch in (ontime, late, sentinel):
             epoch.coalesce(1).write.mode("append").parquet(src)
             q.processAllAvailable()
-    finally:
-        q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+    _run_query(
+        spark,
+        agg.writeStream.format("memory").queryName(name).outputMode("append"),
+        scratch_dir("latedrop_ckpt_"),
+        shuffle_partitions=4,
+        feed=feed,
+    )
     emitted = spark.table(name).filter(F.col("event_type") != "__sentinel__")
     totals = ev.agg(
         F.count(F.lit(1)).alias("n_total"),
@@ -553,6 +534,66 @@ def run_stream_cascade_rollup(
     return out.filter(F.col("event_type") != "__sentinel__")
 
 
+def _purchase_click_legs(
+    spark: SparkSession, sf_dir: str, watermark: str
+) -> tuple[DataFrame, DataFrame]:
+    """The two watermarked legs of the events stream that every
+    stream-stream join runner joins: purchases ``(purchase_id, user_id,
+    purchase_ts)`` and clicks ``(click_id, c_user_id, click_ts)``."""
+    stream = events_file_stream(spark, sf_dir)
+    p = (
+        stream.filter(F.col("event_type") == "purchase")
+        .select(
+            F.col("event_id").alias("purchase_id"),
+            "user_id",
+            F.col("ts").alias("purchase_ts"),
+        )
+        .withWatermark("purchase_ts", watermark)
+    )
+    c = (
+        stream.filter(F.col("event_type") == "click")
+        .select(
+            F.col("event_id").alias("click_id"),
+            F.col("user_id").alias("c_user_id"),
+            F.col("ts").alias("click_ts"),
+        )
+        .withWatermark("click_ts", watermark)
+    )
+    return p, c
+
+
+def _click_within(interval: str) -> Column:
+    """Join condition of every purchase/click range join: same user, click
+    within ``interval`` before the purchase."""
+    return (
+        (F.col("user_id") == F.col("c_user_id"))
+        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr(f"INTERVAL {interval}"))
+        & (F.col("click_ts") < F.col("purchase_ts"))
+    )
+
+
+def _closed_cutoff(spark: SparkSession, sf_dir: str, closed_margin: str):
+    """``least(max purchase ts, max click ts) - closed_margin`` over the
+    batch events table: the boundary below which the outer-join runners'
+    null rows are provably flushed (see
+    :func:`run_stream_stream_left_join`)."""
+    from ..sources.readers import load_table
+
+    return (
+        load_table(spark, sf_dir, "events")
+        .agg(
+            (
+                F.least(
+                    F.max(F.when(F.col("event_type") == "purchase", F.col("ts"))),
+                    F.max(F.when(F.col("event_type") == "click", F.col("ts"))),
+                )
+                - F.expr(f"INTERVAL {closed_margin}")
+            ).alias("c")
+        )
+        .collect()[0]["c"]
+    )
+
+
 def run_stream_stream_range_join(
     spark: SparkSession,
     sf_dir: str,
@@ -573,31 +614,10 @@ def run_stream_stream_range_join(
     single availableNow batch, so the result equals the batch range join
     exactly — that parity is the oracle.
     """
-    stream = events_file_stream(spark, sf_dir)
-    p = (
-        stream.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            "user_id",
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", watermark)
+    p, c = _purchase_click_legs(spark, sf_dir, watermark)
+    joined = p.join(c, _click_within(interval)).select(
+        "purchase_id", "click_id", "user_id", "purchase_ts", "click_ts"
     )
-    c = (
-        stream.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", watermark)
-    )
-    joined = p.join(
-        c,
-        (F.col("user_id") == F.col("c_user_id"))
-        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr(f"INTERVAL {interval}"))
-        & (F.col("click_ts") < F.col("purchase_ts")),
-    ).select("purchase_id", "click_id", "user_id", "purchase_ts", "click_ts")
     return _run_to_memory(joined, "ssjoin")
 
 
@@ -633,42 +653,10 @@ def run_stream_stream_left_join(
     immediately and carry no such subtlety; the same filter applies to
     both sides symmetrically.
     """
-    stream = events_file_stream(spark, sf_dir)
-    p = (
-        stream.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            "user_id",
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", watermark)
-    )
-    c = (
-        stream.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", watermark)
-    )
+    p, c = _purchase_click_legs(spark, sf_dir, watermark)
     joined = stream_stream_left_range_join(p, c, interval=interval)
     result = _run_to_memory(joined, "ssleft")
-    from ..sources.readers import load_table
-
-    cutoff = (
-        load_table(spark, sf_dir, "events")
-        .agg(
-            (
-                F.least(
-                    F.max(F.when(F.col("event_type") == "purchase", F.col("ts"))),
-                    F.max(F.when(F.col("event_type") == "click", F.col("ts"))),
-                )
-                - F.expr(f"INTERVAL {closed_margin}")
-            ).alias("c")
-        )
-        .collect()[0]["c"]
-    )
+    cutoff = _closed_cutoff(spark, sf_dir, closed_margin)
     return result.filter(F.col("purchase_ts") < F.lit(cutoff))
 
 
@@ -695,13 +683,9 @@ def stream_stream_left_range_join(
     correct (absence is only provable watermark-forward), and why this
     operator is pytest-verified rather than batch-parity-oracled.
     """
-    return purchases.join(
-        clicks,
-        (F.col("user_id") == F.col("c_user_id"))
-        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr(f"INTERVAL {interval}"))
-        & (F.col("click_ts") < F.col("purchase_ts")),
-        "leftOuter",
-    ).select("purchase_id", "click_id", "user_id", "purchase_ts", "click_ts")
+    return purchases.join(clicks, _click_within(interval), "leftOuter").select(
+        "purchase_id", "click_id", "user_id", "purchase_ts", "click_ts"
+    )
 
 
 def stream_stream_full_outer_range_join(
@@ -720,13 +704,7 @@ def stream_stream_full_outer_range_join(
     Inputs must carry watermarked ``purchase_ts`` / ``click_ts`` event
     times; returns the unstarted joined stream.  ``user_id`` is
     coalesced across sides so null legs still identify their key."""
-    return purchases.join(
-        clicks,
-        (F.col("user_id") == F.col("c_user_id"))
-        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr(f"INTERVAL {interval}"))
-        & (F.col("click_ts") < F.col("purchase_ts")),
-        "fullOuter",
-    ).select(
+    return purchases.join(clicks, _click_within(interval), "fullOuter").select(
         "purchase_id",
         "click_id",
         F.coalesce(F.col("user_id"), F.col("c_user_id")).alias("user_id"),
@@ -760,42 +738,10 @@ def run_stream_stream_full_outer_join(
     click-nulls whose closure the slower stream has not proven — the
     fixture's click stream ends 4 h before its purchase stream, which
     is exactly the row the first draft lost."""
-    stream = events_file_stream(spark, sf_dir)
-    p = (
-        stream.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            "user_id",
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", watermark)
-    )
-    c = (
-        stream.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", watermark)
-    )
+    p, c = _purchase_click_legs(spark, sf_dir, watermark)
     joined = stream_stream_full_outer_range_join(p, c, interval=interval)
     result = _run_to_memory(joined, "ssfull")
-    from ..sources.readers import load_table
-
-    cutoff = (
-        load_table(spark, sf_dir, "events")
-        .agg(
-            (
-                F.least(
-                    F.max(F.when(F.col("event_type") == "purchase", F.col("ts"))),
-                    F.max(F.when(F.col("event_type") == "click", F.col("ts"))),
-                )
-                - F.expr(f"INTERVAL {closed_margin}")
-            ).alias("c")
-        )
-        .collect()[0]["c"]
-    )
+    cutoff = _closed_cutoff(spark, sf_dir, closed_margin)
     return result.filter(
         F.coalesce(F.col("purchase_ts"), F.col("click_ts")) < F.lit(cutoff)
     )
@@ -1289,7 +1235,6 @@ def fan_out_two_sinks(
     watermark: str = "5 seconds",
     group_cols: list[str] | None = None,
     checkpoint_dir: str | None = None,
-    trigger_available_now: bool = True,
 ):
     """K4: ONE source, TWO sinks — the reference's statement-set shape
     (sensor_aggregation.py:73-98): raw passthrough (K3) plus windowed
@@ -1339,27 +1284,17 @@ def fan_out_two_sinks(
         batch_df.persist()
         try:
             _call(raw_writer, batch_df, batch_id)
-            agg = (
-                batch_df.groupBy(F.window(time_col, duration).alias("window"), *group_cols)
-                .agg(*ROLLUP_AGGS("value"))
-                .select(
-                    F.col("window.start").alias("window_start"),
-                    F.col("window.end").alias("window_end"),
-                    *group_cols,
-                    "avg_value",
-                    "min_value",
-                    "max_value",
-                    "count_readings",
-                )
-            )
+            agg = tumbling_rollup(batch_df, time_col, duration, group_cols)
             _call(agg_writer, agg, batch_id)
         finally:
             batch_df.unpersist()
 
-    writer = stream.writeStream.foreachBatch(process).option("checkpointLocation", ckpt)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return (
+        stream.writeStream.foreachBatch(process)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def cms_bucket_tags(key_col, d: int = 4, w: int = 64, prefix: str = "cms"):
@@ -1416,13 +1351,7 @@ def run_stream_countmin(
             f"{store_dir}/batch_id={batch_id}"
         )
 
-    q = (
-        stream.writeStream.foreachBatch(write)
-        .option("checkpointLocation", f"{store_dir}_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_query(spark, stream.writeStream.foreachBatch(write), f"{store_dir}_ckpt")
 
 
 def read_countmin_estimates(
@@ -1515,13 +1444,7 @@ def run_stream_kmv_store(
             f"{store_dir}/batch_id={batch_id}"
         )
 
-    q = (
-        stream.writeStream.foreachBatch(write)
-        .option("checkpointLocation", f"{store_dir}_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_query(spark, stream.writeStream.foreachBatch(write), f"{store_dir}_ckpt")
 
 
 def read_kmv_estimates(
@@ -1589,7 +1512,6 @@ def run_stream_ivfpq_upsert(
         ivfpq_store_upsert,
         pq_codebook,
     )
-    from ..session import scratch_dir
     from ..sources.readers import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1613,10 +1535,6 @@ def run_stream_ivfpq_upsert(
             df, store_path, cents, book, batch_id, delta_root=delta_root
         )
 
-    q = (
-        stream.writeStream.foreachBatch(write)
-        .option("checkpointLocation", scratch_dir("ivfpq_upsert_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
+    _run_query(
+        spark, stream.writeStream.foreachBatch(write), scratch_dir("ivfpq_upsert_ckpt_")
     )
-    q.awaitTermination()

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from iiot_data_engineering_lab_assignment_spark.operators.windows import tumbling_rollup
+from iiot_data_engineering_lab_assignment_spark.streaming import jobs
 from iiot_data_engineering_lab_assignment_spark.streaming.jobs import (
     events_file_stream,
     fan_out_two_sinks,
@@ -831,3 +832,80 @@ def test_legacy_prestamp_store_is_stamped_not_rebuilt(spark, tmp_path):
         for r in spark.read.parquet(dups).collect()
     }
     assert dup_rows == {(10, 1, "exact")}
+
+
+def _ivfpq_upsert_into_fresh_store(spark, tmp_path):
+    from iiot_data_engineering_lab_assignment_spark.operators.similarity import (
+        build_ivfpq_store,
+    )
+    from iiot_data_engineering_lab_assignment_spark.sources.readers import load_table
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    cut = emb.count() // 2
+    base = str(tmp_path / "base")
+    build_ivfpq_store(emb.filter(F.col("vec_id") < cut), base, n_cells=8, m=4)
+    jobs.run_stream_ivfpq_upsert(spark, SF_DIR, base, cut, n_cells=8, m=4, n_files=3)
+
+
+@pytest.mark.parametrize(
+    "entry",
+    [
+        lambda spark, tmp_path: jobs.run_events_stream_rollup(spark, SF_DIR),
+        lambda spark, tmp_path: jobs.run_events_stream_enriched_rollup(spark, SF_DIR),
+        lambda spark, tmp_path: jobs.run_stream_countmin(
+            spark, SF_DIR, str(tmp_path / "store")
+        ),
+        lambda spark, tmp_path: jobs.run_stream_kmv_store(
+            spark, SF_DIR, str(tmp_path / "store")
+        ),
+        _ivfpq_upsert_into_fresh_store,
+    ],
+    ids=["rollup", "enriched_rollup", "countmin", "kmv_store", "ivfpq_upsert"],
+)
+def test_replay_timeout_raises_stops_and_restores_conf(
+    spark, tmp_path, monkeypatch, entry
+):
+    """A replay whose bounded wait runs out must raise, not hand back a
+    partial result: the query is stopped and the caller's shuffle
+    partition count is restored."""
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    assert spark.streams.active == []
+    monkeypatch.setattr(
+        StreamingQuery, "awaitTermination", lambda self, timeout=None: False
+    )
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "3")
+    try:
+        with pytest.raises(TimeoutError):
+            entry(spark, tmp_path)
+        assert spark.streams.active == []
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+    finally:
+        for q in spark.streams.active:
+            q.stop()
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def test_jobs_start_every_query_in_one_place():
+    """streaming/jobs.py starts queries in exactly two places — the
+    bounded runner ``_run_query`` and ``fan_out_two_sinks``, which
+    returns its running query — and never waits without a bound."""
+    import ast
+    import inspect
+
+    starts, unbounded = [], []
+    for top in ast.parse(inspect.getsource(jobs)).body:
+        for node in ast.walk(top):
+            if not (
+                isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+            ):
+                continue
+            where = getattr(top, "name", "<module>")
+            no_args = not (node.args or node.keywords)
+            if node.func.attr == "start" and no_args:
+                starts.append(where)
+            if node.func.attr == "awaitTermination" and no_args:
+                unbounded.append(where)
+    assert sorted(starts) == ["_run_query", "fan_out_two_sinks"]
+    assert unbounded == []
