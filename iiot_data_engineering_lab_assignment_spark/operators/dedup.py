@@ -16,9 +16,22 @@ Four tiers, cheapest-first — the standard cascade for 100 TB corpora:
 
 All candidate generation and verification is DataFrame ops (explode,
 groupBy, join) — distributed end-to-end, no driver-side pair loops.
+
+Every shingle-based pair operator (jaccard_pairs, containment_pairs,
+minhash_lsh_pairs and its md5 twin, jaccard_pairs_prefix,
+incremental_dedup) runs one core: postings (``shingles`` +
+``_cap_postings``) -> candidates (``_pair_common_counts``'s co-shingle
+counts, or ``_band_buckets`` + ``_bucket_candidates`` for LSH, or a
+prefix / increment-vs-history join) -> verify (``_candidate_common``)
+-> score (``_score_pairs``: threshold on the exact ratio, reported
+rounded to 6 places).  Each operator keeps its own hash family,
+candidate tier and output columns.  simhash_pairs verifies on the
+signature (Hamming), not on postings, and stays separate.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -209,6 +222,59 @@ def _pair_common_counts(post: DataFrame, id_col: str, capped: bool) -> DataFrame
     )
 
 
+def _candidate_common(
+    cands: DataFrame, post_a: DataFrame, post_b: DataFrame, id_col: str
+) -> DataFrame:
+    """Verify candidate pairs (doc_a, doc_b) against posting lists:
+    attach doc_a's shingles from ``post_a``, intersect with doc_b's in
+    ``post_b``, count -> (doc_a, doc_b, common).  Work is O(candidates x
+    shingles per doc), not O(all co-shingle pairs).  Self-pair callers
+    pass one posting list twice; ``incremental_dedup`` passes increment
+    and history.  The posting list is recomputed per subtree on purpose
+    (see jaccard_pairs)."""
+    pa = post_a.select(F.col(id_col).alias("doc_a"), "shingle")
+    pb = post_b.select(F.col(id_col).alias("doc_b"), "shingle")
+    return (
+        cands.join(pa, "doc_a")
+        .join(pb, ["doc_b", "shingle"])
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count(F.lit(1)).alias("common"))
+    )
+
+
+def _score_pairs(
+    common: DataFrame,
+    post_a: DataFrame,
+    post_b: DataFrame,
+    id_col: str,
+    threshold: float,
+    metric: str = "jaccard",
+) -> DataFrame:
+    """Join both sides' shingle-set sizes (from ``post_a``/``post_b``)
+    onto (doc_a, doc_b, common) and score: ``jaccard`` = common /
+    (n_a + n_b - common), ``containment`` = common / min(n_a, n_b).
+    The threshold applies to the EXACT ratio — the oracles' rule, and
+    the bound the prefix filter is lossless for — while the output
+    (doc_a, doc_b, <metric>) reports round(ratio, 6)."""
+
+    def sizes(post, doc, n):
+        return (
+            post.groupBy(id_col)
+            .agg(F.count(F.lit(1)).alias("n_sh"))
+            .select(F.col(id_col).alias(doc), F.col("n_sh").alias(n))
+        )
+
+    n_a, n_b, c = F.col("n_a"), F.col("n_b"), F.col("common")
+    ratio = c / (F.least(n_a, n_b) if metric == "containment" else n_a + n_b - c)
+    return (
+        common.join(sizes(post_a, "doc_a", "n_a"), "doc_a")
+        .join(sizes(post_b, "doc_b", "n_b"), "doc_b")
+        .withColumn(metric, F.round(ratio, 6))
+        .filter(ratio >= threshold)
+        .select("doc_a", "doc_b", metric)
+    )
+
+
 def jaccard_pairs(
     docs: DataFrame,
     n: int = 3,
@@ -236,20 +302,8 @@ def jaccard_pairs(
     deliberately; revisit only if the tokenizer becomes expensive.
     """
     post = _cap_postings(shingles(docs, n, text_col, id_col), max_shingle_df)
-    sizes = post.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     common = _pair_common_counts(post, id_col, capped=max_shingle_df is not None)
-    sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n_sh").alias("n_b"))
-    return (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(F.col("common") / (F.col("n_a") + F.col("n_b") - F.col("common")), 6),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    return _score_pairs(common, post, post, id_col, threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -294,6 +348,61 @@ def minhash_signatures(
     )
 
 
+def _band_buckets(
+    sig: DataFrame,
+    id_col: str,
+    num_hashes: int,
+    bands: int,
+    bucket_sql: Callable[[range], str],
+) -> DataFrame:
+    """Band a K-hash signature frame into per-doc (id, band, bucket)
+    rows: band b covers hashes [b*r, (b+1)*r) with r = K / bands, and
+    ``bucket_sql(ks)`` renders the SQL bucket expression over those
+    0-based hash indices, so each hash family keeps its own bucket hash.
+    Built as one single-parse band array (r16): the same named_struct
+    tree as the Column form, one F.expr call instead of ~100 py4j ones."""
+    if num_hashes % bands != 0:
+        # Silent truncation (rows_per_band = K // B ignoring the remainder)
+        # would quietly shift the S-curve; misconfiguration must fail loudly.
+        raise ValueError(
+            f"num_hashes ({num_hashes}) must be divisible by bands ({bands})"
+        )
+    rows_per_band = num_hashes // bands
+    band_cols = F.expr(
+        "array({})".format(
+            ", ".join(
+                "named_struct('band', {b}, 'bucket', {bucket})".format(
+                    b=b,
+                    bucket=bucket_sql(
+                        range(b * rows_per_band, (b + 1) * rows_per_band)
+                    ),
+                )
+                for b in range(bands)
+            )
+        )
+    )
+    return sig.select(F.col(id_col), F.explode(band_cols).alias("bb")).select(
+        id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
+    )
+
+
+def _bucket_candidates(buckets: DataFrame, id_col: str) -> DataFrame:
+    """LSH candidates: distinct (doc_a, doc_b), doc_a < doc_b, of docs
+    sharing any (band, bucket) — an equi-join, never a cross join."""
+    a = buckets.alias("a")
+    b = buckets.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bucket") == F.col("b.bucket"))
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+        )
+        .select(F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b"))
+        .distinct()
+    )
+
+
 def minhash_lsh_pairs(
     docs: DataFrame,
     num_hashes: int = 32,
@@ -315,72 +424,19 @@ def minhash_lsh_pairs(
     signatures AND the verification universe (see jaccard_pairs).
     Output: (doc_a, doc_b, jaccard) with doc_a < doc_b.
     """
-    if num_hashes % bands != 0:
-        # Silent truncation (rows_per_band = K // B ignoring the remainder)
-        # would quietly shift the S-curve; misconfiguration must fail loudly.
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must be divisible by bands ({bands})"
-        )
-    rows_per_band = num_hashes // bands
     sig = minhash_signatures(docs, num_hashes, n, text_col, id_col, max_shingle_df)
-    # single-parse band array (r16): same named_struct/xxhash64/concat_ws
-    # tree as the Column form, one F.expr call instead of ~100 py4j ones
-    band_cols = F.expr(
-        "array({})".format(
-            ", ".join(
-                "named_struct('band', {b}, 'bucket', xxhash64(concat_ws(',', {els})))".format(
-                    b=b,
-                    els=", ".join(
-                        f"element_at(signature, {b * rows_per_band + r + 1})"
-                        for r in range(rows_per_band)
-                    ),
-                )
-                for b in range(bands)
-            )
-        )
+    buckets = _band_buckets(
+        sig,
+        id_col,
+        num_hashes,
+        bands,
+        lambda ks: "xxhash64(concat_ws(',', {}))".format(
+            ", ".join(f"element_at(signature, {k + 1})" for k in ks)
+        ),
     )
-    buckets = sig.select(F.col(id_col), F.explode(band_cols).alias("bb")).select(
-        id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-    )
-    a = buckets.alias("a")
-    b = buckets.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b"))
-        .distinct()
-    )
-    # Verify ONLY the candidate pairs: attach doc_a's shingles, intersect
-    # with doc_b's posting list, count. Work is O(candidates x shingles per
-    # doc), not O(all co-shingle pairs) — the whole point of LSH.
-    # Recomputed per subtree on purpose — see jaccard_pairs: persisting
-    # the posting list measured slower than recomputation.
     post = _cap_postings(shingles(docs, n, text_col, id_col), max_shingle_df)
-    sizes = post.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    pa = post.select(F.col(id_col).alias("doc_a"), "shingle")
-    pb = post.select(F.col(id_col).alias("doc_b"), "shingle")
-    common = (
-        cands.join(pa, "doc_a")
-        .join(pb, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n_sh").alias("n_b"))
-    return (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(F.col("common") / (F.col("n_a") + F.col("n_b") - F.col("common")), 6),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    common = _candidate_common(_bucket_candidates(buckets, id_col), post, post, id_col)
+    return _score_pairs(common, post, post, id_col, threshold)
 
 
 def containment_pairs(
@@ -400,30 +456,14 @@ def containment_pairs(
     (boilerplate inclusion, article + comment-thread concatenations,
     quoted posts), and symmetric dedup leaves both copies in.
 
-    Same posting-list self-join skeleton as :func:`jaccard_pairs` — only
-    the denominator changes — so the scale posture is identical: docs
-    meet only through shared shingles, the hot-shingle cap bounds the
-    candidate blow-up, and the shuffle carries (id, shingle) pairs.
     ``max_shingle_df`` defaults to 50 (the registry's setting) so the
     bare operator cannot silently go quadratic on stopword shingles;
     pass ``None`` explicitly to disable the cap on pre-filtered input.
     Output: (doc_a, doc_b, containment), doc_a < doc_b.
     """
     post = _cap_postings(shingles(docs, n, text_col, id_col), max_shingle_df)
-    sizes = post.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     common = _pair_common_counts(post, id_col, capped=max_shingle_df is not None)
-    sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n_sh").alias("n_b"))
-    return (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "containment",
-            F.round(F.col("common") / F.least(F.col("n_a"), F.col("n_b")), 6),
-        )
-        .filter(F.col("containment") >= threshold)
-        .select("doc_a", "doc_b", "containment")
-    )
+    return _score_pairs(common, post, post, id_col, threshold, "containment")
 
 
 def _md5_band_buckets(
@@ -434,20 +474,13 @@ def _md5_band_buckets(
     text_col: str,
     id_col: str,
 ) -> tuple[DataFrame, DataFrame]:
-    """Shared signature stage of the DuckDB-reproducible LSH family:
-    shingle postings plus per-doc (band, bucket) rows, where bucket =
-    md5 over the band's ``rows_per_band`` lexicographic-min md5-substring
-    minhashes.  Used by the self-join pair generator and the
-    increment-vs-history cross join."""
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must be divisible by bands ({bands})"
-        )
-    rows_per_band = num_hashes // bands
+    """Signature stage of the DuckDB-reproducible LSH family: shingle
+    postings plus per-doc (band, bucket) rows, where bucket = md5 over
+    the band's lexicographic-min md5-substring minhashes.  Used by the
+    self-join pair generator and the increment-vs-history join."""
     post = shingles(docs, n, text_col, id_col)
-    # F.expr per hash / single-parse band array (r16) — identical trees
-    # to the Column form, a fraction of the py4j round trips; see
-    # minhash_signatures
+    # F.expr per hash (r16) — identical trees to the Column form, a
+    # fraction of the py4j round trips; see minhash_signatures
     aggs = [
         F.expr(
             f"min(substring(md5(concat_ws(':', '{i}', shingle)), 1, 16)) AS h{i}"
@@ -455,21 +488,12 @@ def _md5_band_buckets(
         for i in range(num_hashes)
     ]
     sig = post.groupBy(id_col).agg(*aggs)
-    band_cols = F.expr(
-        "array({})".format(
-            ", ".join(
-                "named_struct('band', {b}, 'bucket', md5(concat_ws('|', {els})))".format(
-                    b=b,
-                    els=", ".join(
-                        f"h{b * rows_per_band + r}" for r in range(rows_per_band)
-                    ),
-                )
-                for b in range(bands)
-            )
-        )
-    )
-    buckets = sig.select(F.col(id_col), F.explode(band_cols).alias("bb")).select(
-        id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
+    buckets = _band_buckets(
+        sig,
+        id_col,
+        num_hashes,
+        bands,
+        lambda ks: "md5(concat_ws('|', {}))".format(", ".join(f"h{k}" for k in ks)),
     )
     return post, buckets
 
@@ -485,9 +509,7 @@ def minhash_lsh_pairs_md5(
 ) -> DataFrame:
     """MinHash-LSH near-dup pairs with a DuckDB-reproducible hash family.
 
-    Identical plan shape to :func:`minhash_lsh_pairs` (banded signatures ->
-    bucket-equality candidates -> exact-Jaccard verify), but the K hash
-    functions are ``substr(md5(seed || ':' || shingle), 1, 16)`` compared
+    The K hash functions are ``substr(md5(seed || ':' || shingle), 1, 16)`` compared
     lexicographically — a valid min-wise family (md5 is uniform over hex
     strings) that an ANSI-SQL oracle can replicate bit-for-bit, unlike
     xxhash64.  This makes the LSH output itself hash-checkable by the
@@ -498,39 +520,8 @@ def minhash_lsh_pairs_md5(
     Output: (doc_a, doc_b, jaccard) with doc_a < doc_b, jaccard >= threshold.
     """
     post, buckets = _md5_band_buckets(docs, num_hashes, bands, n, text_col, id_col)
-    a = buckets.alias("a")
-    b = buckets.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b"))
-        .distinct()
-    )
-    sizes = post.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    pa = post.select(F.col(id_col).alias("doc_a"), "shingle")
-    pb = post.select(F.col(id_col).alias("doc_b"), "shingle")
-    common = (
-        cands.join(pa, "doc_a")
-        .join(pb, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n_sh").alias("n_b"))
-    return (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(F.col("common") / (F.col("n_a") + F.col("n_b") - F.col("common")), 6),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    common = _candidate_common(_bucket_candidates(buckets, id_col), post, post, id_col)
+    return _score_pairs(common, post, post, id_col, threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -1169,38 +1160,21 @@ def incremental_dedup(
     post_h, buckets_h = history_store["postings"], history_store["buckets"]
     post_i, buckets_i = _md5_band_buckets(rest, num_hashes, bands, n, text_col, id_col)
     cands = (
-        buckets_i.withColumnRenamed(id_col, "iid")
-        .join(buckets_h.withColumnRenamed(id_col, "hid"), ["band", "bucket"])
-        .select("iid", "hid")
+        buckets_i.withColumnRenamed(id_col, "doc_a")
+        .join(buckets_h.withColumnRenamed(id_col, "doc_b"), ["band", "bucket"])
+        .select("doc_a", "doc_b")
         .distinct()
     )
-    sizes_i = post_i.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_i"))
-    sizes_h = post_h.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_h"))
-    common = (
-        cands.join(post_i.withColumnRenamed(id_col, "iid"), "iid")
-        .join(
-            post_h.withColumnRenamed(id_col, "hid"),
-            ["hid", "shingle"],
-        )
-        .groupBy("iid", "hid")
-        .agg(F.count(F.lit(1)).alias("common"))
+    verified = _score_pairs(
+        _candidate_common(cands, post_i, post_h, id_col), post_i, post_h, id_col, threshold
     )
-    verified = (
-        common.join(sizes_i.withColumnRenamed(id_col, "iid"), "iid")
-        .join(sizes_h.withColumnRenamed(id_col, "hid"), "hid")
-        .withColumn(
-            "jaccard",
-            F.round(F.col("common") / (F.col("n_i") + F.col("n_h") - F.col("common")), 6),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-    w = Window.partitionBy("iid").orderBy(F.col("jaccard").desc(), F.col("hid").asc())
+    w = Window.partitionBy("doc_a").orderBy(F.col("jaccard").desc(), F.col("doc_b").asc())
     near = (
         verified.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .select(
-            F.col("iid").alias(id_col),
-            F.col("hid").alias("matched_doc"),
+            F.col("doc_a").alias(id_col),
+            F.col("doc_b").alias("matched_doc"),
             F.lit("near").alias("tier"),
             F.col("jaccard"),
         )
@@ -1312,32 +1286,8 @@ def jaccard_pairs_prefix(
         .select("doc_a", "doc_b")
         .distinct()
     )
-    xa = post.select(F.col(id_col).alias("doc_a"), "shingle")
-    xb = post.select(F.col(id_col).alias("doc_b"), "shingle")
-    common = (
-        cand.join(xa, "doc_a")
-        .join(xb, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n_sh").alias("n_b"))
-    return (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("common") / (F.col("n_a") + F.col("n_b") - F.col("common")),
-                6,
-            ),
-        )
-        .filter(
-            F.col("common") / (F.col("n_a") + F.col("n_b") - F.col("common"))
-            >= F.lit(theta)
-        )
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    common = _candidate_common(cand, post, post, id_col)
+    return _score_pairs(common, post, post, id_col, theta)
 
 
 # ---------------------------------------------------------------------------

@@ -768,7 +768,7 @@ def minhash_lsh_pairs_md5_q(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM common
       JOIN size_i si ON si.doc_id = iid
       JOIN size_h sh ON sh.doc_id = hid
-      WHERE ROUND(common * 1.0 / (n_i + n_h - common), 6) >= 0.4
+      WHERE common * 1.0 / (n_i + n_h - common) >= 0.4
     ), near AS (
       SELECT iid AS doc_id, hid AS matched_doc, 'near' AS tier, jaccard
       FROM (SELECT *, row_number() OVER (PARTITION BY iid

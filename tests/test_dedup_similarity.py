@@ -2,12 +2,17 @@
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from iiot_data_engineering_lab_assignment_spark.operators.dedup import (
+    build_history_signature_store,
+    containment_pairs,
     exact_dedup_keep_first,
+    incremental_dedup,
     jaccard_pairs,
     minhash_lsh_pairs,
+    minhash_lsh_pairs_md5,
     minhash_signatures,
     simhash_pairs,
 )
@@ -256,13 +261,63 @@ def test_centroids_match_numpy(spark, embeddings):
             assert math.isclose(got[(label, pos)], round(float(mean[pos]), 6), abs_tol=2e-6)
 
 
-def test_minhash_bands_divisibility_raises(spark, documents):
+@pytest.mark.parametrize(
+    "build",
+    [minhash_lsh_pairs, minhash_lsh_pairs_md5, build_history_signature_store],
+    ids=lambda f: f.__name__,
+)
+def test_minhash_bands_divisibility_raises(spark, documents, build):
     """ADVICE r1: K % B != 0 must fail loudly, not silently truncate the
-    signature (which would shift the S-curve)."""
-    import pytest
-
+    signature (which would shift the S-curve) — on the xxhash64 and the
+    md5 band paths alike."""
     with pytest.raises(ValueError, match="divisible"):
-        minhash_lsh_pairs(documents, num_hashes=32, bands=5)
+        build(documents, num_hashes=32, bands=5)
+
+
+def _pair_at(spark, texts, case, threshold):
+    """Pairs (or near-dup matches) the named operator reports on a
+    two-document corpus at ``threshold``."""
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    if case == "incremental_dedup":
+        history = docs.filter("doc_id = 0")
+        increment = docs.filter("doc_id = 1")
+        rows = incremental_dedup(history, increment, threshold=threshold).collect()
+        return {(r["matched_doc"], r["doc_id"]) for r in rows}
+    fn = {
+        "jaccard_pairs": jaccard_pairs,
+        "jaccard_pairs_capped": lambda d, threshold: jaccard_pairs(
+            d, threshold=threshold, max_shingle_df=10
+        ),
+        "containment_pairs": containment_pairs,
+        # one hash per band, so the 2/3 pair surely shares a bucket
+        "minhash_lsh_pairs": lambda d, threshold: minhash_lsh_pairs(
+            d, bands=32, threshold=threshold
+        ),
+        "minhash_lsh_pairs_md5": minhash_lsh_pairs_md5,
+    }[case]
+    return {(r["doc_a"], r["doc_b"]) for r in fn(docs, threshold=threshold).collect()}
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        "jaccard_pairs",
+        "jaccard_pairs_capped",
+        "minhash_lsh_pairs",
+        "minhash_lsh_pairs_md5",
+        "incremental_dedup",
+        "containment_pairs",
+    ],
+)
+def test_pair_threshold_is_exact_not_rounded(spark, case):
+    """The threshold applies to the exact ratio, not the reported
+    round(ratio, 6): a pair at exactly 2/3 (3-gram Jaccard of "a b c d e"
+    vs "a b c d"; containment of "a b c d e" in "a b c d f") is kept at
+    threshold 2/3 but dropped at 0.6666668, although it reports 0.666667."""
+    second = "a b c d f" if case == "containment_pairs" else "a b c d"
+    texts = ["a b c d e", second]
+    assert _pair_at(spark, texts, case, 2 / 3) == {(0, 1)}
+    assert _pair_at(spark, texts, case, 0.6666668) == set()
 
 
 def _adversarial_stopword_docs(spark):
@@ -927,3 +982,46 @@ def test_non_finite_centroids_and_codebook_assign(spark):
         (r["vec_id"], r["sub_idx"]): r["code"] for r in pq_encode(emb, book).collect()
     }
     assert codes == {(0, 0): 2, (0, 1): 1, (1, 0): 2, (1, 1): 1}
+
+
+def test_dedup_core_lives_in_one_place():
+    """operators/dedup.py bands signatures, intersects candidate postings
+    and divides by the Jaccard denominator in exactly one function each,
+    so a hand copy of the pair-verification core fails here."""
+    import ast
+    import inspect
+
+    from iiot_data_engineering_lab_assignment_spark.operators import dedup
+
+    found = {"band array": set(), "posting intersection": set(), "jaccard denominator": set()}
+    for top in ast.parse(inspect.getsource(dedup)).body:
+        where = getattr(top, "name", "<module>")
+        for node in ast.walk(top):
+            if isinstance(node, ast.Constant) and "named_struct('band'" in str(node.value):
+                found["band array"].add(where)
+            # .join(<postings>, [<doc key>, "shingle"])
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "join"
+                and len(node.args) == 2
+                and isinstance(node.args[1], ast.List)
+                and any(
+                    isinstance(e, ast.Constant) and e.value == "shingle"
+                    for e in node.args[1].elts
+                )
+            ):
+                found["posting intersection"].add(where)
+            # n_a + n_b - common
+            if (
+                isinstance(node, ast.BinOp)
+                and isinstance(node.op, ast.Sub)
+                and isinstance(node.left, ast.BinOp)
+                and isinstance(node.left.op, ast.Add)
+            ):
+                found["jaccard denominator"].add(where)
+    assert found == {
+        "band array": {"_band_buckets"},
+        "posting intersection": {"_candidate_common"},
+        "jaccard denominator": {"_score_pairs"},
+    }

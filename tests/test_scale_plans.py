@@ -10,16 +10,19 @@ from iiot_data_engineering_lab_assignment_spark import registry
 from conftest import SF_DIR
 
 
-def plan_of(spark, name, sf=SF_DIR):
+def formatted_plan(df):
     """Full formatted plan (simple toString truncates long filter lists)."""
     import contextlib
     import io
 
-    df = registry.QUERIES[name].fn(spark, sf)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def plan_of(spark, name, sf=SF_DIR):
+    return formatted_plan(registry.QUERIES[name].fn(spark, sf))
 
 
 def test_dim_chain_broadcasts(spark):
@@ -324,11 +327,24 @@ def test_interpolate_gapfill_spine_broadcasts(spark):
 
 
 def test_md5_lsh_candidate_join_is_equi(spark):
-    """The md5-banded LSH twin generates candidates through an equi-join
-    on (band, bucket) - hash-joinable, no nested-loop fallback."""
-    plan = plan_of(spark, "minhash_lsh_pairs_md5")
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    """Banded LSH generates candidates through an equi-join on
+    (band, bucket) - hash-joinable, no nested-loop fallback - for the
+    md5-banded twin, the xxhash64 operator (called directly: the
+    registry row's envelope wrapper has a legitimate nested-loop join)
+    and the increment-vs-history join."""
+    from iiot_data_engineering_lab_assignment_spark.operators.dedup import (
+        minhash_lsh_pairs,
+    )
+
+    docs = registry.load_table(spark, SF_DIR, "documents")
+    plans = {
+        "minhash_lsh_pairs_md5": plan_of(spark, "minhash_lsh_pairs_md5"),
+        "minhash_lsh_pairs": formatted_plan(minhash_lsh_pairs(docs, 32, 8)),
+        "incremental_dedup_new_docs": plan_of(spark, "incremental_dedup_new_docs"),
+    }
+    for name, plan in plans.items():
+        assert "CartesianProduct" not in plan, name
+        assert "BroadcastNestedLoopJoin" not in plan, name
 
 
 def test_bucketed_join_eliminates_exchange(spark, tmp_path):
