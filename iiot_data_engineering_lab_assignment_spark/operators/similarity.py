@@ -1,11 +1,41 @@
-"""Similarity search over embedding columns (array<float>).
+"""Vector operators over embedding columns (array<float>): exact and
+LSH cosine top-k, int8 and sign-bit quantized tiers, bulk k-NN, cosine
+duplicate pairs, k-means / IVF, SemDeDup, and a product-quantization
+(PQ / IVF-PQ) train, encode and serve stack.
 
-Baseline: brute-force cosine top-k — one scan, pure JVM array expressions
-(zip_with product + aggregate sum), no UDF, no shuffle except the final
-top-k.  Scale path: LSH-bucketed search (random hyperplane signs) that
-probes only the query's bucket neighborhood — at 100 TB the bucketing
-column doubles as the storage partition key so a query touches a fraction
-of files.
+Every operator builds on one small core, so each piece of arithmetic
+that must stay bit-identical across tiers (and to the DuckDB oracles)
+is written once:
+
+* ``_const_vec`` / ``_const_vec_sql`` — a Python vector as a constant
+  ``array<double>``, parsed from ONE ``array(<_dbl>...)`` SQL string
+  instead of one py4j literal per element.
+* ``_nearest_sql`` / ``_nearest_cell`` — the nearest-centroid argmin
+  ``array_min(array(named_struct('d2', |v|^2 - 2 v.c + |c|^2, <label>,
+  id)...))``: sequential-fold distances, lowest-id tiebreak.  k-means
+  assignment, PQ encode and the k-means registry rows all use it.
+* ``_micro`` / ``_micro_mean`` — boundary-safe 6-decimal rounding, and
+  the exact-decimal mean rounded that way: the centroid / codebook
+  update step.
+* ``_gemm_tables`` / ``_gemm_map`` — the Arrow/numpy tier: code-sorted
+  per-subspace centroid tables and one per-batch argmin over
+  ``_fold_d2_matrix``, which replays the fold tier's accumulation order,
+  so both tiers pick the same codes at every config.
+* ``_codebook_frame`` / ``_lut_dist`` / ``_query_lut`` / ``_adc_scored``
+  — asymmetric distance (ADC): the codebook as rows, the query-to-code
+  distance, one query's lookup table and the fixed-subspace-order sum
+  of a vector's m lookups.
+* ``_query_vec`` / ``_ivfpq_prelude`` / ``_write_cell_codes`` — the query
+  fetch, the shared start of the IVF-PQ serving paths and the
+  cell-partitioned code writer of the IVF-PQ store.
+* ``_unit_rows`` — unit-normalizing GEMM operand with the zero-norm
+  clamp (a zero vector scores cosine 0, not NaN).
+
+Pair and top-k scoring are pure JVM array expressions (``zip_with`` +
+``aggregate``) except where a dense block GEMM in ``applyInPandas`` /
+``mapInPandas`` is the scale form.  Parameters (centroids, codebooks,
+query vectors) are collected to the driver and broadcast as literals;
+data is never shuffled to them.
 """
 
 from __future__ import annotations
@@ -51,6 +81,93 @@ def _as_double(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
 
 
+def _as_double_sql(emb_col: str) -> str:
+    """SQL text of :func:`_as_double` over column ``emb_col``."""
+    return f"transform(`{emb_col}`, x -> cast(x as double))"
+
+
+def _dbl(x: float) -> str:
+    """SQL double literal with exact round-trip value: repr() is the
+    shortest digits that reparse to the same IEEE double, and the 'D'
+    suffix keeps the parser from typing plain decimals as DECIMAL.
+    Non-finite values (a centroid averaged over NaN input) have no
+    literal form, so they become the string casts Spark parses."""
+    x = float(x)
+    if math.isfinite(x):
+        return f"{x!r}D"
+    name = "NaN" if math.isnan(x) else ("Infinity" if x > 0 else "-Infinity")
+    return f"CAST('{name}' AS DOUBLE)"
+
+
+def _const_vec_sql(vec) -> str:
+    """SQL text of a constant ``array<double>``."""
+    return f"array({', '.join(_dbl(x) for x in vec)})"
+
+
+def _const_vec(vec) -> Column:
+    """A Python vector as a constant ``array<double>`` Column: one
+    F.expr parse instead of one py4j literal call per element.  The
+    optimized plan is the same literal array either way."""
+    return F.expr(_const_vec_sql(vec))
+
+
+def _dot_sql(a: str, b: str) -> str:
+    """SQL text of :func:`dot`."""
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
+
+
+def _nearest_sql(v: str, cents, label: str) -> str:
+    """SQL text of the nearest-centroid argmin of the double array ``v``
+    over ``cents`` ((id, vector) pairs, in the caller's order):
+    ``array_min`` over ``named_struct('d2', ..., '<label>', id)``.
+    Squared L2 is ``(|v|^2 - 2 v.c) + |c|^2`` with sequential-fold dots
+    and |c|^2 a driver-side left fold, the arithmetic the DuckDB oracles
+    and :func:`_fold_d2_matrix` replay; lexicographic struct order gives
+    the lowest-id tiebreak.  ``.d2`` and ``.<label>`` read the winner."""
+    vnorm = _dot_sql(v, v)
+    entries = []
+    for ident, c in cents:
+        d2 = (
+            f"{vnorm} - 2.0D * {_dot_sql(v, _const_vec_sql(c))} "
+            f"+ {_dbl(float(sum(x * x for x in c)))}"
+        )
+        entries.append(f"named_struct('d2', {d2}, '{label}', {ident})")
+    return f"array_min(array({', '.join(entries)}))"
+
+
+def _nearest_cell(emb_col: str, cents: dict[int, list[float]]) -> Column:
+    """The (d2, cell) struct of each row's nearest centroid in ``cents``
+    ({cell: vector}), as one parsed :func:`_nearest_sql` expression."""
+    return F.expr(_nearest_sql(_as_double_sql(emb_col), sorted(cents.items()), "cell"))
+
+
+def _micro(x: Column) -> Column:
+    """Round to 6 decimals as scale-to-micro-units + 0-decimal round:
+    boundary-safe, because an integer-round .5 boundary IS a
+    representable double, while ROUND(x, 6)'s 5e-7 grid is not."""
+    return F.round(x * F.lit(1000000.0), 0).cast("bigint") / F.lit(1000000.0)
+
+
+def _micro_mean(col: str) -> Column:
+    """The centroid / codebook update: mean of ``col`` through an exact
+    DECIMAL(28,14) sum, cast to double BEFORE the divide, then
+    :func:`_micro`-rounded (see :func:`centroids`)."""
+    return _micro(
+        F.sum(F.col(col).cast("decimal(28,14)")).cast("double") / F.count(F.lit(1))
+    )
+
+
+def _unit_rows(vectors):
+    """Stack a pandas Series of vectors into float64 unit rows.  Norms
+    clamp at 1e-12, so a zero-norm row stays zero and scores cosine 0
+    (below any positive threshold) instead of NaN."""
+    import numpy as np
+
+    M = np.stack(vectors.to_numpy()).astype(np.float64)
+    M /= np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
+    return M
+
+
 def dot(a: Column, b: Column) -> Column:
     """Elementwise product + sequential fold — deterministic summation
     order (matters for cross-engine value comparison)."""
@@ -66,7 +183,7 @@ def l2_norm(a: Column) -> Column:
 def cosine_to_query(emb: Column, query: list[float]) -> Column:
     """Cosine similarity of an array<float> column against a constant query
     vector, computed in double precision."""
-    q = F.array(*[F.lit(float(x)) for x in query])
+    q = _const_vec(query)
     e = _as_double(emb)
     return dot(e, q) / (l2_norm(e) * l2_norm(q))
 
@@ -96,7 +213,7 @@ def hyperplane_bucket(emb: Column, planes: list[list[float]]) -> Column:
     long.  Cosine-similar vectors collide with probability 1 - theta/pi per
     bit."""
     bits = [
-        F.when(dot(_as_double(emb), F.array(*[F.lit(float(x)) for x in p])) >= 0, 1 << i).otherwise(0)
+        F.when(dot(_as_double(emb), _const_vec(p)) >= 0, 1 << i).otherwise(0)
         for i, p in enumerate(planes)
     ]
     out = F.lit(0).cast("long")
@@ -252,9 +369,7 @@ def int8_topk(
     cos = dot(F.col("qv"), F.col("query_qv")) / (F.col("qn") * F.col("query_n"))
     scored = qz.crossJoin(F.broadcast(qrow)).select(
         F.col(id_col),
-        (F.round(cos * F.lit(1000000.0), 0).cast("bigint") / F.lit(1000000.0)).alias(
-            "cosine"
-        ),
+        _micro(cos).alias("cosine"),
     )
     return scored.orderBy(F.desc("cosine"), F.asc(id_col)).limit(k)
 
@@ -329,9 +444,7 @@ def signbit_topk(
         short.select(
             F.col(id_col),
             F.col("hamming"),
-            (F.round(cos * F.lit(1000000.0), 0).cast("bigint") / F.lit(1000000.0)).alias(
-                "cosine"
-            ),
+            _micro(cos).alias("cosine"),
         )
         .orderBy(F.desc("cosine"), F.asc(id_col))
         .limit(k)
@@ -387,9 +500,7 @@ def knn_join(
         .select(
             "query_id",
             "neighbor_id",
-            (F.round(F.col("c") * F.lit(1000000.0), 0).cast("bigint") / F.lit(1000000.0)).alias(
-                "cosine"
-            ),
+            _micro(F.col("c")).alias("cosine"),
         )
     )
 
@@ -512,13 +623,7 @@ def cosine_dup_pairs_blocked(
         B = pdf[pdf["blk"] == bj]
         if len(A) == 0 or len(B) == 0:
             return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []})
-        Am = np.stack(A["v"].to_numpy())
-        Bm = np.stack(B["v"].to_numpy())
-        # norm clamp: a zero-norm embedding gets cosine 0 (below any
-        # positive threshold) instead of NaN + divide warnings (ADVICE r7)
-        Am /= np.maximum(np.linalg.norm(Am, axis=1, keepdims=True), 1e-12)
-        Bm /= np.maximum(np.linalg.norm(Bm, axis=1, keepdims=True), 1e-12)
-        M = Am @ Bm.T
+        M = _unit_rows(A["v"]) @ _unit_rows(B["v"]).T
         ia, ib = np.where(M >= threshold)
         id_a = A["vid"].to_numpy()[ia]
         id_b = B["vid"].to_numpy()[ib]
@@ -568,14 +673,7 @@ def centroids(
     exploded = embeddings.select(
         F.col(label_col), F.posexplode(_as_double(F.col(emb_col))).alias("pos", "v")
     )
-    mean = (
-        F.sum(F.col("v").cast("decimal(28,14)")).cast("double") / F.count(F.lit(1))
-    )
-    return exploded.groupBy(label_col, "pos").agg(
-        (F.round(mean * F.lit(1000000.0), 0).cast("bigint") / F.lit(1000000.0)).alias(
-            "centroid_v"
-        )
-    )
+    return exploded.groupBy(label_col, "pos").agg(_micro_mean("v").alias("centroid_v"))
 
 
 def assign_cells(
@@ -589,30 +687,11 @@ def assign_cells(
     array (k x d doubles — the parameter-server pattern: broadcast
     parameters, never shuffle data to them).  argmin via array_min over
     (dist, cell) structs — lexicographic struct ordering gives the
-    deterministic lowest-cell tiebreak."""
-    # one F.expr parse instead of the k x d py4j literal tree (r16 —
-    # same move as _pq_assign_sql; text reproduces the Column form's
-    # arithmetic exactly, so assignments are bit-identical)
-    v = f"transform(`{emb_col}`, x -> cast(x as double))"
-    vnorm = (
-        f"aggregate(zip_with({v}, {v}, (x, y) -> x * y), 0.0D, "
-        f"(acc, x) -> acc + x)"
-    )
-    entries = []
-    for cell, c in sorted(cents.items()):
-        carr = f"array({', '.join(_dbl(x) for x in c)})"
-        cnorm = float(sum(x * x for x in c))
-        dotvc = (
-            f"aggregate(zip_with({v}, {carr}, (x, y) -> x * y), 0.0D, "
-            f"(acc, x) -> acc + x)"
-        )
-        entries.append(
-            f"named_struct('d2', {vnorm} - 2.0D * {dotvc} + {_dbl(cnorm)}, "
-            f"'cell', {cell})"
-        )
-    best = f"array_min(array({', '.join(entries)})).cell"
+    deterministic lowest-cell tiebreak (:func:`_nearest_sql`)."""
     return embeddings.select(
-        F.col(id_col), F.col(emb_col), F.expr(best).alias("cell")
+        F.col(id_col),
+        F.col(emb_col),
+        _nearest_cell(emb_col, cents)["cell"].alias("cell"),
     )
 
 
@@ -746,9 +825,7 @@ def semantic_dedup_pairs(
         (cell,) = key
         if len(pdf) < 2:
             return pd.DataFrame({"id_a": [], "id_b": [], "cell": [], "cosine": []})
-        M = np.stack(pdf[emb_col].to_numpy()).astype(np.float64)
-        # norm clamp: zero-norm rows -> cosine 0, not NaN (ADVICE r7)
-        M /= np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
+        M = _unit_rows(pdf[emb_col])
         S = M @ M.T
         ia, ib = np.where(S >= threshold)
         ids = pdf[id_col].to_numpy()
@@ -828,12 +905,7 @@ def incremental_semantic_dedup(
         (cell,) = key
         if len(ipdf) == 0 or len(hpdf) == 0:
             return empty
-        I = np.stack(ipdf[emb_col].to_numpy()).astype(np.float64)
-        H = np.stack(hpdf[emb_col].to_numpy()).astype(np.float64)
-        # norm clamp: zero-norm rows -> cosine 0, not NaN (ADVICE r7)
-        I /= np.maximum(np.linalg.norm(I, axis=1, keepdims=True), 1e-12)
-        H /= np.maximum(np.linalg.norm(H, axis=1, keepdims=True), 1e-12)
-        S = I @ H.T
+        S = _unit_rows(ipdf[emb_col]) @ _unit_rows(hpdf[emb_col]).T
         ia, ih = np.where(S >= threshold)
         return pd.DataFrame(
             {
@@ -900,8 +972,8 @@ def pq_codebook(
 def _fold_cnorm(cents_ordered: list[tuple[int, list[float]]]):
     """|c|^2 per code, computed EXACTLY as the fold tier's Python-side
     literal: ``float(sum(x * x for x in c))`` — sequential left fold
-    starting at 0, so the double is bit-identical to the value Catalyst
-    receives via ``F.lit(cnorm)``."""
+    starting at 0, so the double is bit-identical to the |c|^2 literal
+    :func:`_nearest_sql` writes."""
     import numpy as np
 
     return np.array(
@@ -938,24 +1010,65 @@ def _fold_d2_matrix(Xs, C, cnorm):
     return (vnorm[:, None] - 2.0 * dotvc) + cnorm
 
 
+def _gemm_tables(codebook: dict[int, list[tuple[int, list[float]]]]):
+    """Per-subspace tables of the GEMM tier, ``(sub_idx, start, C,
+    cnorm, codes)``, with the code vectors in CODE-SORTED order: argmin's
+    first-index tie rule is then the fold tier's lowest-code tiebreak,
+    and each subspace's own labels map its own argmin indexes, so a
+    per-subspace reordering or a non-dense relabelling of the codebook
+    picks the same codes as the fold tier."""
+    import numpy as np
+
+    tables = []
+    start = 0
+    for s, cents in sorted(codebook.items()):
+        ordered = sorted(cents)
+        C = np.array([c for _, c in ordered], dtype=np.float64)
+        codes = np.array([code for code, _ in ordered], dtype=np.int32)
+        tables.append((s, start, C, _fold_cnorm(ordered), codes))
+        start += C.shape[1]
+    return tables
+
+
+def _gemm_map(frame: DataFrame, emb_col: str, tables, emit, schema) -> DataFrame:
+    """``frame.mapInPandas`` over the GEMM tier: per non-empty Arrow
+    batch, each subspace's nearest code is one vectorized (n x dsub) x
+    (dsub x k) pass of :func:`_fold_d2_matrix` over the
+    :func:`_gemm_tables` entry, so the argmin equals the fold tier's at
+    every config.  ``emit(pdf, argmins)`` turns the batch and its
+    per-subspace ``(sub_idx, Xs, codes, best)`` list into the output
+    frame (``codes[best]`` are the chosen labels)."""
+
+    def _gemm_batches(batches):
+        import numpy as np
+
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            X = np.array([list(v) for v in pdf[emb_col]], dtype=np.float64)
+            argmins = []
+            for s, start, C, cnorm, codes in tables:
+                Xs = X[:, start : start + C.shape[1]]
+                best = _fold_d2_matrix(Xs, C, cnorm).argmin(axis=1)
+                argmins.append((s, Xs, codes, best))
+            yield emit(pdf, argmins)
+
+    return frame.mapInPandas(_gemm_batches, schema)
+
+
 def _gemm_assign_values(
     embeddings: DataFrame,
     book: dict[int, list[tuple[int, list[float]]]],
     emb_col: str,
 ) -> DataFrame:
-    """Arrow/GEMM tier of the trainer's assignment scan: per batch each
-    subspace's distances are one vectorized (n x dsub)x(dsub x k)
-    product (first-min == lowest-code tiebreak), emitted LONG FORM
+    """GEMM tier of the trainer's assignment scan, emitted LONG FORM
     (sub_idx, code, pos, val) so the caller's exact-decimal update
-    aggregate — order-independent — is the same one the expression path
-    feeds.  Needed because the literal-struct argmin tree grows as
-    m*k*dsub expressions: at 8 subspaces x 64 codes Catalyst chokes on
-    the ~512-entry struct array (probe: the 64x8 config hangs in
-    analysis), while this tier's plan size is constant in the code
-    budget.  Distances use :func:`_fold_d2_matrix`, so assignments are
-    bit-identical to the fold tier BY CONSTRUCTION (not by a distance-
-    gap argument) at every config — both tiers train the same codebook."""
-    import numpy as np
+    aggregate is the same one the expression path feeds.  Needed because
+    the literal-struct argmin tree grows as m*k*dsub expressions: at 8
+    subspaces x 64 codes Catalyst chokes on the ~512-entry struct array
+    (the 64x8 config hangs in analysis), while this tier's plan size is
+    constant in the code budget.  Both tiers train the same codebook
+    (see :func:`_gemm_map`)."""
     from pyspark.sql.types import (
         DoubleType,
         IntegerType,
@@ -963,15 +1076,26 @@ def _gemm_assign_values(
         StructType,
     )
 
-    subs = sorted(book.items())
-    mats = []
-    start = 0
-    for s, cents in subs:
-        ordered = sorted(cents)
-        C = np.array([c for _, c in ordered], dtype=np.float64)
-        codes_s = np.array([code for code, _ in ordered], dtype=np.int32)
-        mats.append((s, start, C.shape[1], C, _fold_cnorm(ordered), codes_s))
-        start += C.shape[1]
+    def emit(pdf, argmins):
+        import numpy as np
+        import pandas as pd
+
+        n = len(pdf)
+        return pd.concat(
+            [
+                pd.DataFrame(
+                    {
+                        "sub_idx": np.full(n * Xs.shape[1], s, dtype=np.int32),
+                        "code": np.repeat(codes[best], Xs.shape[1]),
+                        "pos": np.tile(np.arange(Xs.shape[1], dtype=np.int32), n),
+                        "val": Xs.ravel(),
+                    }
+                )
+                for s, Xs, codes, best in argmins
+            ],
+            ignore_index=True,
+        )
+
     out_schema = StructType(
         [
             StructField("sub_idx", IntegerType(), False),
@@ -980,35 +1104,9 @@ def _gemm_assign_values(
             StructField("val", DoubleType(), False),
         ]
     )
-
-    def _assign(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.array([list(v) for v in pdf[emb_col]], dtype=np.float64)
-            n = X.shape[0]
-            frames = []
-            for s, st, dsub, C, cnorm, codes_s in mats:
-                Xs = X[:, st : st + dsub]
-                D = _fold_d2_matrix(Xs, C, cnorm)
-                best = D.argmin(axis=1)
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "sub_idx": np.full(n * dsub, s, dtype=np.int32),
-                            "code": np.repeat(codes_s[best], dsub),
-                            "pos": np.tile(
-                                np.arange(dsub, dtype=np.int32), n
-                            ),
-                            "val": Xs.ravel(),
-                        }
-                    )
-                )
-            yield pd.concat(frames, ignore_index=True)
-
-    return embeddings.select(emb_col).mapInPandas(_assign, out_schema)
+    return _gemm_map(
+        embeddings.select(emb_col), emb_col, _gemm_tables(book), emit, out_schema
+    )
 
 
 def pq_codebook_train(
@@ -1031,70 +1129,40 @@ def pq_codebook_train(
     (sub_idx, code, pos) shuffle for the exact-decimal update — m*k*dsub
     = 512 aggregate rows, parameters not data).  Distances are the same
     sequential-fold |v|^2 - 2 v.c + |c|^2 with the (d2, code) tiebreak as
-    :func:`pq_encode`; the update is the exact-decimal micro-unit-rounded
-    mean of :func:`centroids`, so iteration-2 assignments see the
-    identical rounded doubles in both engines.  Returns the codebook in
-    :func:`pq_codebook`'s {sub_idx: [(code, subvector), ...]} shape, so
-    encode / ADC / IVF-PQ store plumbing is unchanged — training refines
-    the parameters, not the serving plan.
+    :func:`pq_encode`; the update is :func:`_micro_mean`, the
+    exact-decimal micro-unit-rounded mean of :func:`centroids`, so
+    iteration-2 assignments see the identical rounded doubles in both
+    engines.  Returns the codebook in :func:`pq_codebook`'s
+    {sub_idx: [(code, subvector), ...]} shape, so encode / ADC / IVF-PQ
+    store plumbing is unchanged — training refines the parameters, not
+    the serving plan.
 
     ``gemm=True`` swaps the assignment scan for the Arrow/GEMM tier
     (:func:`_gemm_assign_values`) — REQUIRED beyond small code budgets:
     the literal-struct argmin tree grows as m*k expressions and
-    Catalyst chokes near m*k ~ 512 (probe: the 64-code x 8-subspace
-    config hangs in analysis), while the GEMM plan is constant-size in
-    the code budget.  The update aggregate is the identical
-    order-independent exact-decimal form either way, and the GEMM
-    tier's distances replay the fold's accumulation order exactly
-    (:func:`_fold_d2_matrix`), so both tiers train the SAME codebook by
-    construction at every config — pytest-pinned equal at 8x4 and
-    driver-checked at 64x8 (``pq_codebook_trained_gemm``, a config the
-    fold tier cannot even plan)."""
+    Catalyst chokes near m*k ~ 512 (the 64-code x 8-subspace config
+    hangs in analysis), while the GEMM plan is constant-size in the
+    code budget.  Both tiers feed the same update and pick the same
+    codes, so they train the SAME codebook at every config —
+    pytest-pinned equal at 8x4 and oracle-checked at 64x8
+    (``pq_codebook_trained_gemm``, a config the fold tier cannot even
+    plan)."""
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
     book = pq_codebook(embeddings, n_codes, m, id_col, emb_col)
     for _ in range(iters):
         if gemm:
             assigned = _gemm_assign_values(embeddings, book, emb_col)
-            mean = (
-                F.sum(F.col("val").cast("decimal(28,14)")).cast("double")
-                / F.count(F.lit(1))
+        else:
+            assigned = embeddings.select(
+                F.expr(_pq_assign_sql(book, emb_col, with_subvector=True)).alias("a")
+            ).select(
+                F.col("a.sub_idx").alias("sub_idx"),
+                F.col("a.code").alias("code"),
+                F.posexplode(F.col("a.v")).alias("pos", "val"),
             )
-            upd = assigned.groupBy("sub_idx", "code", "pos").agg(
-                (
-                    F.round(mean * F.lit(1000000.0), 0).cast("bigint")
-                    / F.lit(1000000.0)
-                ).alias("cv")
-            )
-            new = {
-                s2: {code: list(vec) for code, vec in cents}
-                for s2, cents in book.items()
-            }
-            for r in upd.collect():
-                new[r["sub_idx"]][r["code"]][r["pos"]] = float(r["cv"])
-            book = {
-                s2: sorted((code, vec) for code, vec in d2.items())
-                for s2, d2 in new.items()
-            }
-            continue
-        assigned = embeddings.select(
-            F.expr(_pq_assign_sql(book, emb_col, with_subvector=True)).alias(
-                "a"
-            )
-        ).select(
-            F.col("a.sub_idx").alias("sub_idx"),
-            F.col("a.code").alias("code"),
-            F.posexplode(F.col("a.v")).alias("pos", "val"),
-        )
-        mean = (
-            F.sum(F.col("val").cast("decimal(28,14)")).cast("double")
-            / F.count(F.lit(1))
-        )
         upd = assigned.groupBy("sub_idx", "code", "pos").agg(
-            (
-                F.round(mean * F.lit(1000000.0), 0).cast("bigint")
-                / F.lit(1000000.0)
-            ).alias("cv")
+            _micro_mean("val").alias("cv")
         )
         new = {
             s: {code: list(vec) for code, vec in cents}
@@ -1102,24 +1170,8 @@ def pq_codebook_train(
         }
         for r in upd.collect():
             new[r["sub_idx"]][r["code"]][r["pos"]] = float(r["cv"])
-        book = {
-            s: sorted((code, vec) for code, vec in d.items())
-            for s, d in new.items()
-        }
+        book = {s: sorted(d.items()) for s, d in new.items()}
     return book
-
-
-def _dbl(x: float) -> str:
-    """SQL double literal with exact round-trip value: repr() is the
-    shortest digits that reparse to the same IEEE double, and the 'D'
-    suffix keeps the parser from typing plain decimals as DECIMAL.
-    Non-finite values (a centroid averaged over NaN input) have no
-    literal form, so they become the string casts Spark parses."""
-    x = float(x)
-    if math.isfinite(x):
-        return f"{x!r}D"
-    name = "NaN" if math.isnan(x) else ("Infinity" if x > 0 else "-Infinity")
-    return f"CAST('{name}' AS DOUBLE)"
 
 
 def _pq_assign_sql(
@@ -1128,40 +1180,16 @@ def _pq_assign_sql(
     with_subvector: bool = False,
 ) -> str:
     """The per-subspace nearest-code assignment as ONE SQL expression
-    string (r16, guide §7.3-class driver cost): the Column-API form of
-    this m x k literal tree cost ~1-2 s of py4j round trips per
-    DataFrame construction (hundreds of lit/struct/lambda calls), paid
-    on every bench repetition and every job submission; one F.expr
-    parse is a single JVM call.  The TEXT reproduces the Column tree's
-    arithmetic exactly — same slice/zip_with/aggregate fold, same
-    ((vnorm - 2.0*dot) + cnorm) association, same (d2, code) struct
-    argmin with the lowest-code tiebreak — so results are bit-identical
-    (A/B exceptAll-checked; the pq rows are oracle-value-hashed).
-    Returns `explode(array(<m named_structs>))`; each struct carries
-    (sub_idx, code[, v] when ``with_subvector``)."""
+    string: the Column-API form of this m x k literal tree cost ~1-2 s
+    of py4j round trips per DataFrame construction, one F.expr parse is
+    a single JVM call.  Each subspace is a :func:`_nearest_sql` argmin
+    over its slice.  Returns `explode(array(<m named_structs>))`; each
+    struct carries (sub_idx, code[, v] when ``with_subvector``)."""
     subs = []
     for s, cents in sorted(codebook.items()):
         dsub = len(cents[0][1])
-        v = (
-            f"slice(transform(`{emb_col}`, x -> cast(x as double)), "
-            f"{s * dsub + 1}, {dsub})"
-        )
-        vnorm = (
-            f"aggregate(zip_with({v}, {v}, (x, y) -> x * y), 0.0D, "
-            f"(acc, x) -> acc + x)"
-        )
-        entries = []
-        for code, c in cents:
-            carr = f"array({', '.join(_dbl(x) for x in c)})"
-            cnorm = float(sum(x * x for x in c))
-            dotvc = (
-                f"aggregate(zip_with({v}, {carr}, (x, y) -> x * y), 0.0D, "
-                f"(acc, x) -> acc + x)"
-            )
-            d2 = f"{vnorm} - 2.0D * {dotvc} + {_dbl(cnorm)}"
-            entries.append(f"named_struct('d2', {d2}, 'code', {code})")
-        best = f"array_min(array({', '.join(entries)}))"
-        fields = f"'sub_idx', {s}, 'code', {best}.code"
+        v = f"slice({_as_double_sql(emb_col)}, {s * dsub + 1}, {dsub})"
+        fields = f"'sub_idx', {s}, 'code', {_nearest_sql(v, cents, 'code')}.code"
         if with_subvector:
             fields += f", 'v', {v}"
         subs.append(f"named_struct({fields})")
@@ -1193,55 +1221,50 @@ def pq_encode(
     )
 
 
-def _adc_parts(
-    spark,
-    q: list[float],
-    codebook: dict[int, list[tuple[int, list[float]]]],
-):
-    """The shared ADC machinery (single source of truth for the
-    bit-reproducibility-critical arithmetic — review catch: it was
-    previously duplicated between :func:`pq_adc_topk` and
-    :func:`ivf_pq_topk`, a silent-desync hazard): returns
-    ``(lut, adc_raw)`` where ``lut`` is the m x n_codes lookup table of
-    subspace distances from the query to each code vector and
-    ``adc_raw`` the aggregate expression summing a vector's m lookups
-    in FIXED subspace order (conditional sums, not a shuffle-order SUM).
-
-    r11 fix (r9 ADVICE low): the LUT is now derived from the PASSED
-    ``codebook`` — the previous form rebuilt it from the pinned
-    ``id < n_codes`` embedding slices, so any caller passing a trained
-    codebook silently scored against the wrong table.  The codebook's
-    centroid doubles go in as a literal DataFrame and the distance is
-    the same sequential-fold ``dot`` arithmetic as before, so for the
-    pinned codebook the LUT values are bit-identical to the old path
-    (the centroids ARE those slices, collected and re-emitted as the
-    same IEEE doubles)."""
-    m = len(codebook)
-    dsub = len(q) // m
+def _codebook_frame(spark, codebook: dict[int, list[tuple[int, list[float]]]]):
+    """The codebook as (sub_idx, code, cv) rows — parameters, not data."""
     rows = [
         (int(s), int(code), [float(x) for x in cv])
         for s, cents in sorted(codebook.items())
         for code, cv in cents
     ]
-    book = spark.createDataFrame(
-        rows, "sub_idx int, code int, cv array<double>"
+    return spark.createDataFrame(rows, "sub_idx int, code int, cv array<double>")
+
+
+def _lut_dist(qv: Column) -> Column:
+    """ADC lookup-table entry: squared L2 from the query subvector ``qv``
+    to the code vector ``cv``, qq - 2 qc + cc with sequential-fold dots."""
+    cv = F.col("cv")
+    return dot(qv, qv) - F.lit(2.0) * dot(qv, cv) + dot(cv, cv)
+
+
+def _query_lut(
+    spark, q: list[float], codebook: dict[int, list[tuple[int, list[float]]]]
+) -> DataFrame:
+    """The m x n_codes lookup table (code, sub_idx, dist) of subspace
+    distances from the query ``q`` to each code vector of the PASSED
+    codebook (trained or pinned)."""
+    dsub = len(q) // len(codebook)
+    qs = F.slice(_const_vec(q), F.col("sub_idx") * dsub + 1, dsub)
+    return _codebook_frame(spark, codebook).select(
+        "code", "sub_idx", _lut_dist(qs).alias("dist")
     )
-    qfull = F.array(*[F.lit(float(x)) for x in q])
-    qs = F.slice(qfull, F.col("sub_idx") * dsub + 1, dsub)
-    lut = book.select(
-        "code",
-        "sub_idx",
-        (dot(qs, qs) - F.lit(2.0) * dot(qs, F.col("cv")) + dot(F.col("cv"), F.col("cv"))).alias(
-            "dist"
-        ),
-    )
-    part = [
-        F.sum(F.when(F.col("sub_idx") == s, F.col("dist"))) for s in range(m)
-    ]
+
+
+def _adc_scored(codes: DataFrame, lut: DataFrame, m: int, keys: list[str]) -> DataFrame:
+    """Asymmetric distance per ``keys`` group: join the codes to the
+    broadcast LUT and sum the m lookups in FIXED subspace order
+    (conditional sums, not a shuffle-order SUM), so the single-query,
+    bulk and GEMM paths all emit the same doubles.  Column ``adc_raw``."""
+    part = [F.sum(F.when(F.col("sub_idx") == s, F.col("dist"))) for s in range(m)]
     adc_raw = part[0]
     for p in part[1:]:
         adc_raw = adc_raw + p
-    return lut, adc_raw
+    return (
+        codes.join(F.broadcast(lut), ["sub_idx", "code"])
+        .groupBy(*keys)
+        .agg(adc_raw.alias("adc_raw"))
+    )
 
 
 def pq_adc_topk(
@@ -1255,22 +1278,12 @@ def pq_adc_topk(
     """Asymmetric distance computation over PQ codes — the FAISS serving
     path: the (uncompressed) query precomputes one m x n_codes distance
     lookup table, and every stored vector's approximate distance is m
-    table lookups + adds, never a d-element fold per pair (the shared
-    :func:`_adc_parts` machinery), broadcast into the codes join.
-    Ascending (distance, id) top-k."""
+    table lookups + adds, never a d-element fold per pair, broadcast
+    into the codes join.  Ascending (distance, id) top-k."""
     codes = pq_encode(embeddings, codebook, id_col, emb_col)
-    qrow = (
-        embeddings.filter(F.col(id_col) == query_id).select(emb_col).head()
-    )
-    if qrow is None:
-        raise ValueError(f"query vector {id_col}={query_id} not found")
-    q = [float(x) for x in qrow[emb_col]]
-    lut, adc_raw = _adc_parts(embeddings.sparkSession, q, codebook)
-    scored = (
-        codes.join(F.broadcast(lut), ["sub_idx", "code"])
-        .groupBy(id_col)
-        .agg(adc_raw.alias("adc_raw"))
-    )
+    q = _query_vec(embeddings, query_id, id_col, emb_col)
+    lut = _query_lut(embeddings.sparkSession, q, codebook)
+    scored = _adc_scored(codes, lut, len(codebook), [id_col])
     return (
         scored.orderBy(F.asc("adc_raw"), F.asc(id_col))
         .limit(k)
@@ -1293,25 +1306,16 @@ def pq_adc_knn_join(
     probe's m x n_codes lookup table is built in ONE tiny plan (probes x
     codebook rows — q*m*k rows, parameters not data), broadcast into a
     single pass over the corpus codes, and per-(query, vector) distances
-    sum in FIXED subspace order (the `_adc_parts` conditional-sum tree),
-    so each emitted double is bit-identical to the single-query path's.
-    Per-query ascending (distance, id) top-k via one window — the only
+    sum in FIXED subspace order (:func:`_adc_scored`), so each emitted
+    double is bit-identical to the single-query path's.  Per-query
+    ascending (distance, id) top-k via one window — the only
     corpus-sized shuffle is the (query_id, vec_id) aggregate, corpus
     codes never re-fold per probe.  Returns (query_id, neighbor id, adc).
     """
     from pyspark.sql import Window
 
-    spark = embeddings.sparkSession
     m = len(codebook)
     dsub = len(codebook[0][0][1])
-    rows = [
-        (int(s), int(code), [float(x) for x in cv])
-        for s, cents in sorted(codebook.items())
-        for code, cv in cents
-    ]
-    book = spark.createDataFrame(
-        rows, "sub_idx int, code int, cv array<double>"
-    )
     e = _as_double(F.col(emb_col))
     probe_sub = probes.select(
         F.col(id_col).alias("query_id"),
@@ -1327,16 +1331,9 @@ def pq_adc_knn_join(
             )
         ).alias("p"),
     ).select("query_id", F.col("p.sub_idx").alias("sub_idx"), F.col("p.qv").alias("qv"))
-    lut = probe_sub.join(book, "sub_idx").select(
-        "query_id",
-        "sub_idx",
-        "code",
-        (
-            dot(F.col("qv"), F.col("qv"))
-            - F.lit(2.0) * dot(F.col("qv"), F.col("cv"))
-            + dot(F.col("cv"), F.col("cv"))
-        ).alias("dist"),
-    )
+    lut = probe_sub.join(
+        _codebook_frame(embeddings.sparkSession, codebook), "sub_idx"
+    ).select("query_id", "sub_idx", "code", _lut_dist(F.col("qv")).alias("dist"))
     # fold encode for small code budgets (bit-parity with pq_adc_topk);
     # GEMM tier for large ones, where the literal argmin tree chokes
     codes = (
@@ -1344,17 +1341,7 @@ def pq_adc_knn_join(
         if gemm
         else pq_encode(embeddings, codebook, id_col, emb_col)
     )
-    part = [
-        F.sum(F.when(F.col("sub_idx") == s, F.col("dist"))) for s in range(m)
-    ]
-    adc_raw = part[0]
-    for p in part[1:]:
-        adc_raw = adc_raw + p
-    scored = (
-        codes.join(F.broadcast(lut), ["sub_idx", "code"])
-        .groupBy("query_id", id_col)
-        .agg(adc_raw.alias("adc_raw"))
-    )
+    scored = _adc_scored(codes, lut, m, ["query_id", id_col])
     w = Window.partitionBy("query_id").orderBy(
         F.asc("adc_raw"), F.asc(id_col)
     )
@@ -1393,21 +1380,16 @@ def ivf_pq_topk(
     (adc, id) are re-ranked by exact squared L2, and the (d2, id)
     top-k emits.  Only the codes table (m bytes/vector) is touched at
     corpus scale until the final shortlist-sized exact pass."""
-    cents = _pinned_seeds(embeddings, n_cells, id_col, emb_col)
-    q = _query_vec(embeddings, query_id, id_col, emb_col)
-    probe_cells = _probe_cells(q, cents, nprobe)
-
+    cents, q, probe_cells, book = _ivfpq_prelude(
+        embeddings, query_id, nprobe, n_cells, m, id_col, emb_col
+    )
     assigned = assign_cells(embeddings, cents, id_col, emb_col).select(
         id_col, "cell"
     )
     cand = assigned.filter(F.col("cell").isin(probe_cells)).select(id_col)
-    book = pq_codebook(
-        embeddings, n_codes=n_cells, m=m, id_col=id_col, emb_col=emb_col, seeds=cents
-    )
-    # semi-filter to the probed cells BEFORE encoding (review catch: a
-    # join on the encoded output cannot be pushed below the per-row
-    # encode by Catalyst, so the whole corpus paid the m*k argmin) —
-    # only ~nprobe/n_cells of vectors are encoded, identical result
+    # semi-filter to the probed cells BEFORE encoding: a join on the
+    # encoded output cannot be pushed below the per-row encode by
+    # Catalyst, so only ~nprobe/n_cells of vectors pay the m*k argmin
     codes = pq_encode(
         embeddings.join(cand, id_col, "left_semi"), book, id_col, emb_col
     )
@@ -1436,9 +1418,7 @@ def _pinned_seeds(
     embeddings: DataFrame, n_cells: int, id_col: str, emb_col: str
 ) -> dict[int, list[float]]:
     """The pinned-seed coarse centroids (``id < n_cells``) as one k-row
-    parameter collect — shared by the IVF-PQ build, inline, and stored
-    serving paths (r11 code-review: three drifting copies, and the
-    build/serve paths each paid the collect twice)."""
+    parameter collect, shared by the IVF-PQ build and serving paths."""
     rows = sorted(
         embeddings.filter(F.col(id_col) < n_cells)
         .select(id_col, emb_col)
@@ -1472,6 +1452,27 @@ def _probe_cells(
     ]
 
 
+def _ivfpq_prelude(
+    embeddings: DataFrame,
+    query_id: int,
+    nprobe: int,
+    n_cells: int,
+    m: int,
+    id_col: str,
+    emb_col: str,
+):
+    """Shared start of every IVF-PQ serving path: pinned coarse
+    centroids, the query vector, its ``nprobe`` nearest cells and the
+    pinned PQ codebook (slices of the same seeds, no second collect).
+    Returns ``(cents, q, probe_cells, book)``."""
+    cents = _pinned_seeds(embeddings, n_cells, id_col, emb_col)
+    q = _query_vec(embeddings, query_id, id_col, emb_col)
+    book = pq_codebook(
+        embeddings, n_codes=n_cells, m=m, id_col=id_col, emb_col=emb_col, seeds=cents
+    )
+    return cents, q, _probe_cells(q, cents, nprobe), book
+
+
 def _adc_shortlist_rerank(
     embeddings: DataFrame,
     codes: DataFrame,
@@ -1485,16 +1486,14 @@ def _adc_shortlist_rerank(
     """Shared serving tail of the inline and stored IVF-PQ paths: ADC
     shortlist over the candidate codes (broadcast m x n_codes LUT), then
     exact squared-L2 re-rank of the survivors, (d2, id) top-k."""
-    lut, adc_raw = _adc_parts(embeddings.sparkSession, q, book)
+    lut = _query_lut(embeddings.sparkSession, q, book)
     short = (
-        codes.join(F.broadcast(lut), ["sub_idx", "code"])
-        .groupBy(id_col)
-        .agg(adc_raw.alias("adc_raw"))
+        _adc_scored(codes, lut, len(book), [id_col])
         .orderBy(F.asc("adc_raw"), F.asc(id_col))
         .limit(shortlist)
     )
     e = _as_double(F.col(emb_col))
-    qarr = F.array(*[F.lit(x) for x in q])
+    qarr = _const_vec(q)
     exact = short.join(embeddings.select(id_col, emb_col), id_col).select(
         id_col,
         (dot(e, e) - F.lit(2.0) * dot(e, qarr) + dot(qarr, qarr)).alias("d2_raw"),
@@ -1503,6 +1502,31 @@ def _adc_shortlist_rerank(
         exact.orderBy(F.asc("d2_raw"), F.asc(id_col))
         .limit(k)
         .select(id_col, F.round("d2_raw", 6).alias("d2"))
+    )
+
+
+def _write_cell_codes(
+    vectors: DataFrame,
+    cents: dict[int, list[float]],
+    book: dict[int, list[tuple[int, list[float]]]],
+    path: str,
+    id_col: str,
+    emb_col: str,
+) -> None:
+    """Coarse-assign and PQ-encode ``vectors`` against a fixed quantizer
+    and overwrite ``path`` with the long-form codes (id, sub_idx, code)
+    as parquet partitioned by cell — the store layout of the IVF-PQ
+    build and of every upsert batch."""
+    assigned = assign_cells(vectors, cents, id_col, emb_col).select(
+        id_col, F.col("cell").cast("int").alias("cell")
+    )
+    codes = pq_encode(vectors, book, id_col, emb_col)
+    (
+        codes.join(assigned, id_col)
+        .repartition("cell")  # one writer task per cell dir, no tiny files
+        .write.mode("overwrite")
+        .partitionBy("cell")
+        .parquet(path)
     )
 
 
@@ -1524,23 +1548,13 @@ def build_ivfpq_store(
     embeddings.  Centroids/codebook are the pinned ``id < n_cells``
     convention shared with :func:`ivf_pq_topk`, so the stored codes are
     deterministic and a serving query over the store is value-identical
-    to the inline plan (r10 verdict: probe measured 0.84 s/query stored
-    vs 34.1 s inline at 1M vectors, SCALE.md r9)."""
+    to the inline plan (probe measured 0.84 s/query stored vs 34.1 s
+    inline at 1M vectors, SCALE.md)."""
     cents = _pinned_seeds(embeddings, n_cells, id_col, emb_col)
-    assigned = assign_cells(embeddings, cents, id_col, emb_col).select(
-        id_col, F.col("cell").cast("int").alias("cell")
-    )
     book = pq_codebook(
         embeddings, n_codes=n_cells, m=m, id_col=id_col, emb_col=emb_col, seeds=cents
     )
-    codes = pq_encode(embeddings, book, id_col, emb_col)
-    (
-        codes.join(assigned, id_col)
-        .repartition("cell")  # one writer task per cell dir, no tiny files
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(path)
-    )
+    _write_cell_codes(embeddings, cents, book, path, id_col, emb_col)
 
 
 def ivf_pq_topk_stored(
@@ -1555,9 +1569,9 @@ def ivf_pq_topk_stored(
     id_col: str = "vec_id",
     emb_col: str = "embedding",
 ) -> DataFrame:
-    """The SERVING half of the IVF-PQ split (r10 verdict ask #3): query
-    against a :func:`build_ivfpq_store` index instead of re-assigning
-    and re-encoding the corpus per call (the inline :func:`ivf_pq_topk`
+    """The SERVING half of the IVF-PQ split: query against a
+    :func:`build_ivfpq_store` index instead of re-assigning and
+    re-encoding the corpus per call (the inline :func:`ivf_pq_topk`
     registers the oracle-demo shape; this is the operational one).
 
     Plan: probe selection is k-row driver-side parameter math (same
@@ -1570,15 +1584,11 @@ def ivf_pq_topk_stored(
     re-rank.  Value-identical to the inline plan (same pinned
     centroids/codebook, same fixed-subspace-order ADC sums), so it
     shares its value-hash oracle."""
-    spark = embeddings.sparkSession
-    cents = _pinned_seeds(embeddings, n_cells, id_col, emb_col)
-    q = _query_vec(embeddings, query_id, id_col, emb_col)
-    probe_cells = _probe_cells(q, cents, nprobe)
-    codes = spark.read.parquet(store_path).filter(
-        F.col("cell").isin(probe_cells)
+    _, q, probe_cells, book = _ivfpq_prelude(
+        embeddings, query_id, nprobe, n_cells, m, id_col, emb_col
     )
-    book = pq_codebook(
-        embeddings, n_codes=n_cells, m=m, id_col=id_col, emb_col=emb_col, seeds=cents
+    codes = embeddings.sparkSession.read.parquet(store_path).filter(
+        F.col("cell").isin(probe_cells)
     )
     return _adc_shortlist_rerank(
         embeddings, codes, q, book, shortlist, k, id_col, emb_col
@@ -1596,12 +1606,12 @@ def ivfpq_store_upsert(
     delta_root: str | None = None,
 ) -> None:
     """UPSERT one batch of new vectors into a :func:`build_ivfpq_store`
-    index (r11 verdict ask #5 — the index-maintenance path the offline
-    build lacks): the batch is coarse-assigned and PQ-encoded against
-    the FIXED quantizer captured at build time (``cents``/``book`` are
-    parameters, never re-derived from data — re-deriving would silently
-    re-key every existing cell), and lands under
-    ``<store>/delta/batch_id=N`` partitioned by cell.
+    index (the index-maintenance path the offline build lacks): the
+    batch is coarse-assigned and PQ-encoded against the FIXED quantizer
+    captured at build time (``cents``/``book`` are parameters, never
+    re-derived from data — re-deriving would silently re-key every
+    existing cell), and lands under ``<store>_delta/batch_id=N``
+    partitioned by cell.
 
     Exactly-once under retry: the write is mode=overwrite into the
     batch's OWN ``batch_id=N`` directory (the
@@ -1620,16 +1630,8 @@ def ivfpq_store_upsert(
     O(batch x k_cells) assignment scan and an m-bytes/vector append;
     the base cells are never rewritten."""
     root = delta_root or f"{store_path}_delta"
-    assigned = assign_cells(new_vectors, cents, id_col, emb_col).select(
-        id_col, F.col("cell").cast("int").alias("cell")
-    )
-    codes = pq_encode(new_vectors, book, id_col, emb_col)
-    (
-        codes.join(assigned, id_col)
-        .repartition("cell")  # one writer task per cell dir, no tiny files
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(f"{root}/batch_id={batch_id}")
+    _write_cell_codes(
+        new_vectors, cents, book, f"{root}/batch_id={batch_id}", id_col, emb_col
     )
 
 
@@ -1655,26 +1657,25 @@ def ivf_pq_topk_upsert(
     tests/test_scale_plans.py); the union feeds the shared ADC
     shortlist + exact re-rank tail, value-identical to serving a full
     rebuild (same fixed quantizer, same fixed-subspace-order sums)."""
-    import os
-
     spark = embeddings.sparkSession
-    cents = _pinned_seeds(embeddings, n_cells, id_col, emb_col)
-    q = _query_vec(embeddings, query_id, id_col, emb_col)
-    probe_cells = _probe_cells(q, cents, nprobe)
+    _, q, probe_cells, book = _ivfpq_prelude(
+        embeddings, query_id, nprobe, n_cells, m, id_col, emb_col
+    )
     codes = spark.read.parquet(store_path).filter(
         F.col("cell").isin(probe_cells)
     ).select(id_col, "sub_idx", "code")
     delta_root = delta_root or f"{store_path}_delta"
-    if os.path.exists(delta_root):
+    # existence through the root's own Hadoop FileSystem, so file:,
+    # hdfs:// and s3a:// store paths find their deltas like plain paths
+    root = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(delta_root)
+    fs = root.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    if fs.exists(root):
         delta = (
             spark.read.parquet(delta_root)
             .filter(F.col("cell").isin(probe_cells))
             .select(id_col, "sub_idx", "code")
         )
         codes = codes.unionByName(delta)
-    book = pq_codebook(
-        embeddings, n_codes=n_cells, m=m, id_col=id_col, emb_col=emb_col, seeds=cents
-    )
     return _adc_shortlist_rerank(
         embeddings, codes, q, book, shortlist, k, id_col, emb_col
     )
@@ -1690,19 +1691,15 @@ def pq_encode_gemm(
     encoder at 10^9 vectors: per batch, each subspace's distances are
     ONE (n x dsub) @ (dsub x k) matrix product instead of m*k
     interpreted fold expressions per row (the probe-measured ~10x
-    lever; SCALE.md round 9).
+    lever; SCALE.md).
 
     The CODES are identical to the fold form: argmin of
-    |v|^2 - 2 v.c + |c|^2 with the lowest-code tiebreak (np.argmin
-    returns the first minimum and codes are sorted ascending), and the
-    distances themselves come from :func:`_fold_d2_matrix` — the
-    sequential-fold accumulation order of the JVM tier replayed in
-    numpy — so tier equality is BY CONSTRUCTION at every config (r12
-    ADVICE closed: previously BLAS's reordered accumulation left a
-    last-ulp argmin flip open on near-equidistant code vectors).  This
-    registers against the SAME value-hash oracle as ``pq_codes_fixed``
-    (exact integer outputs)."""
-    import numpy as np
+    |v|^2 - 2 v.c + |c|^2 with the lowest-code tiebreak over
+    :func:`_gemm_tables`, and the distances come from
+    :func:`_fold_d2_matrix` — the sequential-fold accumulation order of
+    the JVM tier replayed in numpy — so tier equality holds BY
+    CONSTRUCTION at every config.  This registers against the SAME
+    value-hash oracle as ``pq_codes_fixed`` (exact integer outputs)."""
     from pyspark.sql.types import (
         IntegerType,
         LongType,
@@ -1710,20 +1707,25 @@ def pq_encode_gemm(
         StructType,
     )
 
-    subs = sorted(codebook.items())
-    # Per-subspace CODE-SORTED centroid matrix (r11 code-review family
-    # fix, same as pq_adc_topk_gemm): argmin's first-index tie rule then
-    # equals the fold form's lowest-code tiebreak, and each subspace's
-    # own code labels map its own argmin indexes — a per-subspace
-    # reordering or non-dense relabeling scores identically.
-    mats = []  # (sub_idx, start, dsub, C (k x dsub), cnorm (k,), codes)
-    start = 0
-    for s, cents in subs:
-        ordered = sorted(cents)
-        C = np.array([c for _, c in ordered], dtype=np.float64)
-        codes_s = np.array([code for code, _ in ordered], dtype=np.int32)
-        mats.append((s, start, C.shape[1], C, _fold_cnorm(ordered), codes_s))
-        start += C.shape[1]
+    def emit(pdf, argmins):
+        import numpy as np
+        import pandas as pd
+
+        ids = pdf[id_col].to_numpy()
+        return pd.concat(
+            [
+                pd.DataFrame(
+                    {
+                        id_col: ids,
+                        "sub_idx": np.full(len(ids), s, dtype=np.int32),
+                        "code": codes[best],
+                    }
+                )
+                for s, _, codes, best in argmins
+            ],
+            ignore_index=True,
+        )
+
     out_schema = StructType(
         [
             StructField(id_col, LongType(), False),
@@ -1731,32 +1733,13 @@ def pq_encode_gemm(
             StructField("code", IntegerType(), False),
         ]
     )
-
-    def _encode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.array([list(v) for v in pdf[emb_col]], dtype=np.float64)
-            ids = pdf[id_col].to_numpy()
-            frames = []
-            for s, st, dsub, C, cnorm, codes_s in mats:
-                Xs = X[:, st : st + dsub]
-                D = _fold_d2_matrix(Xs, C, cnorm)
-                best = D.argmin(axis=1)  # first min == lowest code
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            id_col: ids,
-                            "sub_idx": np.full(len(ids), s, dtype=np.int32),
-                            "code": codes_s[best],
-                        }
-                    )
-                )
-            yield pd.concat(frames, ignore_index=True)
-
-    return embeddings.select(id_col, emb_col).mapInPandas(_encode, out_schema)
+    return _gemm_map(
+        embeddings.select(id_col, emb_col),
+        emb_col,
+        _gemm_tables(codebook),
+        emit,
+        out_schema,
+    )
 
 
 def pq_adc_topk_gemm(
@@ -1767,76 +1750,55 @@ def pq_adc_topk_gemm(
     id_col: str = "vec_id",
     emb_col: str = "embedding",
 ) -> DataFrame:
-    """Arrow-batched GEMM tier of :func:`pq_adc_topk` (r10 verdict ask
-    #8): per batch, each subspace scores as ONE (n x dsub) @ (dsub x
-    n_codes) matrix product + argmin, the m lookups gather as numpy
-    fancy-indexing, and only the batch's k best (adc, id) rows leave
-    Python — the corpus never crosses Arrow as scored rows, so the
-    global TakeOrdered merges P*k candidates.
+    """Arrow-batched GEMM tier of :func:`pq_adc_topk`: per batch, each
+    subspace scores as ONE (n x dsub) @ (dsub x n_codes) matrix product
+    + argmin, the m lookups gather as numpy fancy-indexing, and only the
+    batch's k best (adc, id) rows leave Python — the corpus never
+    crosses Arrow as scored rows, so the global TakeOrdered merges P*k
+    candidates.
 
     Bit parity with the fold form, term by term: (1) codes — the
-    distance matrix is :func:`_fold_d2_matrix`, the JVM fold's
-    accumulation order replayed in numpy, so GEMM argmin == fold argmin
-    by construction at every config; (2) the LUT —
-    COLLECTED from the same `_adc_parts` Spark plan, so its doubles are
-    the fold form's doubles verbatim; (3) the per-vector total — numpy
-    elementwise adds in FIXED subspace order ((l0+l1)+l2)+l3, the exact
-    add tree of `adc_raw`.  IEEE doubles make each step deterministic,
-    so the top-k is value-identical and shares pq_adc_topk's oracle."""
+    :func:`_gemm_map` argmin equals the fold argmin by construction at
+    every config; (2) the LUT — COLLECTED from the same
+    :func:`_query_lut` Spark plan, so its doubles are the fold form's
+    doubles verbatim, aligned to each subspace's code-sorted table by
+    label; (3) the per-vector total — numpy elementwise adds in FIXED
+    subspace order ((l0+l1)+l2)+l3, the exact add tree of
+    :func:`_adc_scored`.  IEEE doubles make each step deterministic, so
+    the top-k is value-identical and shares pq_adc_topk's oracle."""
     import numpy as np
     from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-    qrow = embeddings.filter(F.col(id_col) == query_id).select(emb_col).head()
-    if qrow is None:
-        raise ValueError(f"query vector {id_col}={query_id} not found")
-    q = [float(x) for x in qrow[emb_col]]
-    lut_df, _ = _adc_parts(embeddings.sparkSession, q, codebook)
-    subs = sorted(codebook.items())
+    q = _query_vec(embeddings, query_id, id_col, emb_col)
     lut = {  # m x n_codes parameter rows, never data
-        (r["sub_idx"], r["code"]): r["dist"] for r in lut_df.collect()
+        (r["sub_idx"], r["code"]): r["dist"]
+        for r in _query_lut(embeddings.sparkSession, q, codebook).collect()
     }
-    # Per-subspace centroid matrix in CODE-SORTED order: argmin's
-    # first-index tie rule then equals the fold form's (d2, code)
-    # tiebreak, and the LUT vector is aligned by POSITION, so arbitrary
-    # per-subspace orderings and non-dense code labels — both accepted
-    # by pq_adc_topk — score identically here (r11 code-review catch:
-    # the previous code applied subspace 0's ordering to every subspace
-    # and indexed the LUT by raw label).
-    mats = []  # (start, dsub, C (k x dsub), cnorm (k,), termvec (k,))
-    start = 0
-    for s, cents in subs:
-        ordered = sorted(cents)
-        C = np.array([c for _, c in ordered], dtype=np.float64)
-        termvec = np.array(
-            [lut[(s, code)] for code, _ in ordered], dtype=np.float64
-        )
-        mats.append((start, C.shape[1], C, _fold_cnorm(ordered), termvec))
-        start += C.shape[1]
+    tables = _gemm_tables(codebook)
+    termvecs = {
+        s: np.array([lut[(s, int(code))] for code in codes], dtype=np.float64)
+        for s, _, _, _, codes in tables
+    }
+
+    def emit(pdf, argmins):
+        import pandas as pd
+
+        adc = None
+        for s, _, _, best in argmins:
+            term = termvecs[s][best]
+            adc = term if adc is None else adc + term
+        out = pd.DataFrame({id_col: pdf[id_col].to_numpy(), "adc_raw": adc})
+        return out.sort_values(["adc_raw", id_col]).head(k)
+
     out_schema = StructType(
         [
             StructField(id_col, LongType(), False),
             StructField("adc_raw", DoubleType(), False),
         ]
     )
-
-    def _score(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.array([list(v) for v in pdf[emb_col]], dtype=np.float64)
-            ids = pdf[id_col].to_numpy()
-            adc = None
-            for st, dsub, C, cnorm, termvec in mats:
-                Xs = X[:, st : st + dsub]
-                D = _fold_d2_matrix(Xs, C, cnorm)
-                term = termvec[D.argmin(axis=1)]
-                adc = term if adc is None else adc + term
-            out = pd.DataFrame({id_col: ids, "adc_raw": adc})
-            yield out.sort_values([ "adc_raw", id_col]).head(k)
-
-    scored = embeddings.select(id_col, emb_col).mapInPandas(_score, out_schema)
+    scored = _gemm_map(
+        embeddings.select(id_col, emb_col), emb_col, tables, emit, out_schema
+    )
     return (
         scored.orderBy(F.asc("adc_raw"), F.asc(id_col))
         .limit(k)

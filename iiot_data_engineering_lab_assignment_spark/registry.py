@@ -8018,7 +8018,7 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitted value)."""
     import math
 
-    from .operators.similarity import _as_double, dot, l2_norm
+    from .operators.similarity import _as_double, _const_vec, dot, l2_norm
 
     emb = load_table(spark, sf_dir, "embeddings")
     qrow = emb.filter(F.col("vec_id") == 0).head()
@@ -8029,7 +8029,7 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     for x in q:
         qq = qq + x * x
     qn = math.sqrt(qq)
-    qarr = F.array(*[F.lit(x) for x in q])
+    qarr = _const_vec(q)
     e = _as_double(F.col("embedding"))
     scored = emb.filter(F.col("vec_id") != 0).select(
         "vec_id", (dot(e, qarr) / (l2_norm(e) * F.lit(qn))).alias("s")

@@ -43,23 +43,13 @@ def kmeans_assignments_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash while a legitimate seeding change cannot.  Cluster-recovery
     quality on planted clusters stays pinned in
     tests/test_dedup_similarity.py."""
-    from .operators.similarity import _as_double, dot, kmeans_train
+    from .operators.similarity import _as_double, _nearest_cell, dot, kmeans_train
 
     emb = load_table(spark, sf_dir, "embeddings")
     assigned, cents, _ = kmeans_train(emb, k=8, max_iter=5)
     e = _as_double(F.col("embedding"))
     vnorm = dot(e, e)
-    entries = []
-    for cell, c in sorted(cents.items()):
-        carr = F.array(*[F.lit(float(x)) for x in c])
-        cnorm = float(sum(x * x for x in c))
-        entries.append(
-            F.struct(
-                (vnorm - F.lit(2.0) * dot(e, carr) + F.lit(cnorm)).alias("d2"),
-                F.lit(cell).alias("cell"),
-            )
-        )
-    best = F.array_min(F.array(*entries))
+    best = _nearest_cell("embedding", cents)
     # r11 (r10 verdict ask #7): the global-mean term no longer needs its
     # own posexplode full-corpus scan + collect — with S_i the per-dim
     # sums, sum||v - m||^2 = sum|v|^2 - (S.S)/n, so the d per-dim sums
@@ -300,19 +290,11 @@ def kmeans_inertia_fixed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan with the k x d centroid matrix broadcast as literals + one
     cell aggregate — the assign_cells plan plus a map-side-combinable
     sum."""
-    from .operators.similarity import _as_double, dot
+    from .operators.similarity import _nearest_cell
 
     emb = load_table(spark, sf_dir, "embeddings")
     cents = _kmeans2_cents(emb, k=8, iters=2)
-    e = _as_double(F.col("embedding"))
-    vnorm = dot(e, e)
-    entries = []
-    for cell, c in sorted(cents.items()):
-        carr = F.array(*[F.lit(float(x)) for x in c])
-        cnorm = float(sum(x * x for x in c))
-        d2 = vnorm - F.lit(2.0) * dot(e, carr) + F.lit(cnorm)
-        entries.append(F.struct(d2.alias("d2"), F.lit(cell).alias("cell")))
-    best = F.array_min(F.array(*entries))
+    best = _nearest_cell("embedding", cents)
     return (
         emb.select(
             best["cell"].cast("int").alias("cell"),

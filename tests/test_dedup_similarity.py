@@ -1025,3 +1025,84 @@ def test_dedup_core_lives_in_one_place():
         "posting intersection": {"_candidate_common"},
         "jaccard denominator": {"_score_pairs"},
     }
+
+
+def test_similarity_core_lives_in_one_place():
+    """The vector-quantization steps are built in exactly one function
+    each across operators/similarity.py and the registry rows that score
+    vectors: the nearest-centroid argmin and its (d2, id) struct, the
+    exact-decimal mean, the sequential-fold GEMM distance call and the
+    zero-norm clamp; and no constant vector is built one F.lit per
+    element.  A hand copy of any of them fails here."""
+    import ast
+    import inspect
+
+    from iiot_data_engineering_lab_assignment_spark import registry, registry_clustering
+    from iiot_data_engineering_lab_assignment_spark.operators import similarity
+
+    def attr_call(node, name):
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == name
+        )
+
+    found = {
+        "argmin": set(),
+        "d2 struct": set(),
+        "decimal mean": set(),
+        "fold d2 call": set(),
+        "norm clamp": set(),
+        "per-element literal vector": set(),
+    }
+    for mod in (similarity, registry_clustering, registry):
+        tree = ast.parse(inspect.getsource(mod))
+        docstrings = {
+            id(n.value)
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Expr) and isinstance(n.value, ast.Constant)
+        }
+        for top in tree.body:
+            where = f"{mod.__name__.rsplit('.', 1)[-1]}.{getattr(top, 'name', '<module>')}"
+            for node in ast.walk(top):
+                if isinstance(node, ast.Constant) and id(node) not in docstrings:
+                    text = str(node.value)
+                    if "array_min(array(" in text:
+                        found["argmin"].add(where)
+                    if "named_struct('d2'" in text:
+                        found["d2 struct"].add(where)
+                    if "decimal(28,14)" in text:
+                        found["decimal mean"].add(where)
+                # Column-API forms: F.array_min(F.array(...)) and
+                # F.struct(<d2>.alias("d2"), ...)
+                if attr_call(node, "array_min") and node.args and attr_call(node.args[0], "array"):
+                    found["argmin"].add(where)
+                if attr_call(node, "struct") and any(
+                    attr_call(a, "alias") and a.args and getattr(a.args[0], "value", None) == "d2"
+                    for a in node.args
+                ):
+                    found["d2 struct"].add(where)
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Name)
+                    and node.func.id == "_fold_d2_matrix"
+                ):
+                    found["fold d2 call"].add(where)
+                if attr_call(node, "maximum") and node.args and attr_call(node.args[0], "norm"):
+                    found["norm clamp"].add(where)
+                # F.array(*[F.lit(x) for x in vec])
+                if attr_call(node, "array") and any(
+                    isinstance(a, ast.Starred)
+                    and isinstance(a.value, ast.ListComp)
+                    and attr_call(a.value.elt, "lit")
+                    for a in node.args
+                ):
+                    found["per-element literal vector"].add(where)
+    assert found == {
+        "argmin": {"similarity._nearest_sql"},
+        "d2 struct": {"similarity._nearest_sql"},
+        "decimal mean": {"similarity._micro_mean"},
+        "fold d2 call": {"similarity._gemm_map"},
+        "norm clamp": {"similarity._unit_rows"},
+        "per-element literal vector": set(),
+    }

@@ -21,6 +21,32 @@ from iiot_data_engineering_lab_assignment_spark.sources.readers import load_tabl
 SF_DIR = "/root/testdata/sf0.001"
 SF_DIR_01 = "/root/testdata/sf0.01"
 
+# Codebook variants the GEMM tier must score exactly like the fold tier:
+# the pinned book, translated centroids, per-subspace ORDER shuffled (odd
+# subspaces reversed) and labels relabelled non-densely (code*3).  The
+# fold tier accepts all four; the GEMM ADC tier once applied subspace 0's
+# ordering to every subspace and indexed its LUT by raw label.
+PQ_BOOK_VARIANTS = [
+    pytest.param(lambda book: book, id="pinned"),
+    pytest.param(
+        lambda book: {
+            s: [(c, [x + 1.5 for x in v]) for c, v in cents] for s, cents in book.items()
+        },
+        id="translated",
+    ),
+    pytest.param(
+        lambda book: {
+            s: (list(reversed(cents)) if s % 2 else list(cents))
+            for s, cents in book.items()
+        },
+        id="reordered",
+    ),
+    pytest.param(
+        lambda book: {s: [(c * 3, v) for c, v in cents] for s, cents in book.items()},
+        id="relabelled",
+    ),
+]
+
 
 # ---------------------------------------------------------------------------
 # product quantization
@@ -90,7 +116,7 @@ def test_pq_adc_missing_query_raises(embeddings):
 
 def test_pq_adc_follows_passed_codebook(embeddings):
     """r11 regression (r9 ADVICE low): the ADC lookup table must be
-    derived from the codebook ARGUMENT.  The pre-fix `_adc_parts`
+    derived from the codebook ARGUMENT.  The pre-fix ADC lookup
     rebuilt it from the pinned `id < n_codes` slices, so (a) a
     code-relabeled book broke relabel invariance (codes permuted, LUT
     didn't) and (b) a trained/shifted book was silently ignored."""
@@ -841,14 +867,15 @@ def test_mase_planted_perfect_seasonality(spark, tmp_path):
     assert got["error"]["mase"] is None  # constant series: 0/0 guarded
 
 
-def test_pq_gemm_codes_equal_fold_codes(spark, embeddings):
+@pytest.mark.parametrize("variant", PQ_BOOK_VARIANTS)
+def test_pq_gemm_codes_equal_fold_codes(spark, embeddings, variant):
     """The GEMM tier must produce bit-identical codes to the fold form
-    (argmin invariant to accumulation order)."""
+    (argmin invariant to accumulation order) on every codebook variant."""
     from iiot_data_engineering_lab_assignment_spark.operators.similarity import (
         pq_encode_gemm,
     )
 
-    book = pq_codebook(embeddings, n_codes=8, m=4)
+    book = variant(pq_codebook(embeddings, n_codes=8, m=4))
     fold = {
         (r["vec_id"], r["sub_idx"]): r["code"]
         for r in pq_encode(embeddings, book).collect()
@@ -1053,36 +1080,19 @@ def test_rolling_slope_minute_cadence_no_overflow(spark, tmp_path):
     assert got[0]["slope_per_day"] is None  # n=1 guard intact
 
 
-def test_pq_adc_gemm_matches_fold_topk(spark, embeddings):
-    """r11 (r10 verdict ask #8 done-criterion): the GEMM ADC tier must
-    produce a BIT-identical shortlist to the fold form — same ids, same
-    rounded distances, for the pinned book AND a translated one."""
+@pytest.mark.parametrize("variant", PQ_BOOK_VARIANTS)
+def test_pq_adc_gemm_matches_fold_topk(spark, embeddings, variant):
+    """The GEMM ADC tier must produce a BIT-identical shortlist to the
+    fold form — same ids, same rounded distances — on every codebook
+    variant."""
     from iiot_data_engineering_lab_assignment_spark.operators.similarity import (
-        pq_adc_topk,
         pq_adc_topk_gemm,
-        pq_codebook,
     )
 
-    book = pq_codebook(embeddings, n_codes=8, m=4)
-    variants = (
-        book,
-        # translated centroids
-        {s: [(c, [x + 1.5 for x in v]) for c, v in cents] for s, cents in book.items()},
-        # r11 code-review regression: per-subspace ORDER shuffled (odd
-        # subspaces reversed) and labels relabeled non-densely (code*3)
-        # — both accepted by the fold form; the GEMM tier previously
-        # applied subspace 0's ordering to every subspace and indexed
-        # its LUT by raw label
-        {
-            s: (list(reversed(cents)) if s % 2 else list(cents))
-            for s, cents in book.items()
-        },
-        {s: [(c * 3, v) for c, v in cents] for s, cents in book.items()},
-    )
-    for b in variants:
-        fold = [tuple(r) for r in pq_adc_topk(embeddings, b, query_id=0, k=10).collect()]
-        gemm = [tuple(r) for r in pq_adc_topk_gemm(embeddings, b, query_id=0, k=10).collect()]
-        assert gemm == fold
+    b = variant(pq_codebook(embeddings, n_codes=8, m=4))
+    fold = [tuple(r) for r in pq_adc_topk(embeddings, b, query_id=0, k=10).collect()]
+    gemm = [tuple(r) for r in pq_adc_topk_gemm(embeddings, b, query_id=0, k=10).collect()]
+    assert gemm == fold
 
 
 def test_source_epoch_allocation_caps_and_shares(spark, documents):
@@ -1233,11 +1243,13 @@ def _upsert_quantizer(embeddings):
     return cents, book
 
 
-def test_ivfpq_upsert_serving_equals_full_rebuild(spark, embeddings, tmp_path):
+@pytest.mark.parametrize("scheme", ["", "file://"], ids=["path", "file_uri"])
+def test_ivfpq_upsert_serving_equals_full_rebuild(spark, embeddings, tmp_path, scheme):
     """Base (first half) + streamed delta (second half, multiple
     micro-batches) must serve a top-k VALUE-IDENTICAL to a full offline
     rebuild and to the inline plan — zero recall drift under the fixed
-    quantizer."""
+    quantizer — whether the store is a plain path or a ``file:`` URI
+    (the delta root's existence is checked through Hadoop, not os.path)."""
     from iiot_data_engineering_lab_assignment_spark.operators.similarity import (
         build_ivfpq_store,
         ivf_pq_topk,
@@ -1250,7 +1262,7 @@ def test_ivfpq_upsert_serving_equals_full_rebuild(spark, embeddings, tmp_path):
 
     n = embeddings.count()
     cut = n // 2
-    base = str(tmp_path / "base")
+    base = scheme + str(tmp_path / "base")
     build_ivfpq_store(
         embeddings.filter(F.col("vec_id") < cut), base, n_cells=8, m=4
     )
